@@ -430,8 +430,9 @@ object Bench {
     // removals or renames): every pre-existing arm at sf0.1 is stage-latency /
     // overhead-bound, so the driver's low-core bench run could not observe the
     // `local[$SPARK_GRAFT_CPUS]` contract from the artifact. This arm is the
-    // minhash signature kernel over every sf0.1 document (replicated 4x inside
-    // each task) — per-task compute whose wall time tracks available cores.
+    // minhash signature kernel over every sf0.1 document (128 replicas per doc,
+    // generated inside each task) — per-task compute whose wall time tracks
+    // available cores.
     // Same measurement protocol as every query (measure(): warmup + timed,
     // min-of-2 past 0.8 s), adjudicated against the previous sidecar like the
     // rest.
@@ -824,13 +825,14 @@ object Bench {
                       pair()
                     }
                   }
-                  // Publish gate (round 15, verdict item 3): a block ratio whose
-                  // EVERY contributing window exceeded AmbientWatch must not ship
-                  // — co-tenant load only inflates readings, so min-of-arms from
-                  // dirty windows overstates the ratio (r14 minhash 11.47x vs
-                  // 3.66x quiet). Cool down and re-pair until one clean window
-                  // participates in the min; bounded at two extra pairs, arms
-                  // printed like every adjudication.
+                  // Clean-window retry (round 15, verdict item 3), best-effort
+                  // and bounded: co-tenant load only inflates readings, so
+                  // min-of-arms from dirty windows overstates the ratio (r14
+                  // minhash 11.47x vs 3.66x quiet). While no contributing window
+                  // was at or below AmbientWatch, cool down and re-pair, at most
+                  // two extra pairs, arms printed like every adjudication. If
+                  // every window is still dirty after that, the ratio publishes
+                  // anyway; only the ambient history in the sidecar shows it.
                   var cleanRetries = 0
                   while (big >= 0 && !sawClean && cleanRetries < 2) {
                     cleanRetries += 1
@@ -945,8 +947,9 @@ object Bench {
               (1 to 2).foreach(_ => wPair())
               if (w10 / wDen > 10.0) wPair()
             }
-            // Publish gate (round 15, verdict item 3) — same as the per-query
-            // arms: no clean window in the min-of-arms history → cooldown pair.
+            // Clean-window retry (round 15, verdict item 3) — same as the
+            // per-query arms: no clean window in the min-of-arms history →
+            // cooldown pair, at most two; after that the ratio publishes anyway.
             var wCleanRetries = 0
             while (wDen > 0 && !wClean && wCleanRetries < 2) {
               wCleanRetries += 1

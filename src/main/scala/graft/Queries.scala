@@ -5031,7 +5031,7 @@ object Queries {
     * (`suspect_cpus_ignored` false positive in PERF_r14). This arm IS
     * compute-bound by construction: the minhash signature kernel — the sf10
     * ngram hot loop, O(len·128) per row — over every sf0.1 document, replicated
-    * 4x row-locally AFTER a round-robin spread to the session parallelism, into
+    * 128x row-locally AFTER a round-robin spread to the session parallelism, into
     * a single-row order-insensitive checksum. Wall time tracks available cores;
     * the checksum is recomputed from the parquet input on every invocation
     * (nothing cached or precomputed).

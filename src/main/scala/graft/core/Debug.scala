@@ -15,9 +15,10 @@ import org.apache.spark.sql.DataFrame
   *
   * Execution model trade (deliberate, mirrors the reference's DebugLevel semantics
   * where higher levels change what executes): production `ValidationSuite.run`
-  * fuses every batchable constraint into ONE scan, which makes per-constraint
-  * attribution physically unobservable — one job, one duration. Debug mode runs
-  * constraints ONE AT A TIME so each gets its own plan, its own wall time, and its
+  * fuses the batchable constraints into at most two concurrent scans (the plain
+  * one and one for exact DISTINCT aggregates), which makes per-constraint
+  * attribution physically unobservable — one job, one duration per scan. Debug
+  * mode runs constraints ONE AT A TIME so each gets its own plan, its own wall time, and its
   * own scheduler footprint. Use it to diagnose, not to benchmark the fused path.
   */
 object DebugValidation {

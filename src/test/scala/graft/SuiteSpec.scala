@@ -137,6 +137,34 @@ class SuiteSpec extends SparkSpec {
     // Listener observes the same results the report carries.
     assert(constraintEvents.map(_.status).toSet.subsetOf(
       report.allResults.map(_.status).toSet))
+
+    // With a PK + median pair both scan groups exist (the DISTINCT scan on `id` and
+    // the plain scan): completions still arrive on the calling thread, batched
+    // first in declaration order, then the multi-job constraint, suite last.
+    val threads = scala.collection.mutable.ArrayBuffer.empty[Thread]
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    val twoScans = new ValidationListener {
+      def onConstraintComplete(r: ConstraintResult): Unit = {
+        threads += Thread.currentThread(); names += r.constraint
+      }
+      def onSuiteComplete(name: String, m: ValidationMetrics): Unit = {
+        threads += Thread.currentThread(); names += "suite"
+      }
+    }
+    val suite2 = ValidationSuite.builder("telemetry2")
+      .check(CheckBuilder("c1", Level.Error)
+        .hasSize(Assertion.Equals(100))
+        .isPrimaryKey("id")
+        .hasHistogramSatisfying("status", "has ok")(h => h.buckets.contains("ok"))
+        .hasMedian("amount", Assertion.Between(70.0, 80.0))
+        .hasCompleteness("status", Assertion.Equals(0.9)).build())
+      .build()
+    val report2 = suite2.run(df, twoScans)
+    val declared = suite2.checks.flatMap(_.constraints)
+    assert(threads.forall(_ eq Thread.currentThread()), threads.map(_.getName))
+    assert(names.toSeq == declared.filter(_.aggregates.nonEmpty).map(_.name) ++
+      declared.filter(_.aggregates.isEmpty).map(_.name) :+ "suite", names)
+    assert(report2.allResults.forall(_.isSuccess), report2.allResults)
   }
 
   test("suite report: error-level failure fails the suite, warning does not") {
@@ -381,5 +409,137 @@ class SuiteSpec extends SparkSpec {
     val basic = DebugValidation.run(suite, df, DebugLevel.Basic)
     assert(basic.timeline.forall(e => e.plans.isEmpty && e.aggExpressions.isEmpty))
     assert(basic.timeline.map(_.seq) == Seq(1, 2, 3, 4, 5))
+  }
+
+  /** Runs `f` and returns the global aggregations it executed over frames with a
+    * column named `marker`, as (grouping key names of each grouped aggregate node,
+    * whether that node computes a percentile_approx) per executed query.
+    */
+  private def executedAggregations(marker: String)(f: => Unit): Seq[Seq[(Seq[String], Boolean)]] = {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.ApproximatePercentile
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Seq[String], Boolean)]]()
+    val helper = new AdaptiveSparkPlanHelper {}
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.find(_.output.exists(_.name == marker)).isDefined)
+          captured.add(helper.collect(qe.executedPlan) { case a: BaseAggregateExec =>
+            (a.groupingExpressions.map(_.name),
+              a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[ApproximatePercentile]))
+          })
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // Deliver earlier queries' events first: the bus is asynchronous.
+    org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 10000L)
+    spark.listenerManager.register(qel)
+    try f finally {
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 10000L)
+      spark.listenerManager.unregister(qel)
+    }
+    scala.jdk.CollectionConverters.IteratorHasAsScala(captured.iterator()).asScala.toSeq
+  }
+
+  private lazy val keyed = {
+    import spark.implicits._
+    (1 to 200).map(i => (i.toLong, s"s${i % 40}", if (i % 9 == 0) null else s"n${i % 7}", i * 1.5))
+      .toDF("dk_id", "dk_second", "dk_name", "dk_amount")
+  }
+
+  test("DISTINCT aggregates run in their own scan, quantiles never per key") {
+    val check = CheckBuilder("keys", Level.Error)
+      .hasSize(Assertion.Equals(200))
+      .isPrimaryKey("dk_id")
+      .hasMedian("dk_amount", Assertion.Between(100.0, 200.0))
+      .isUnique("dk_id")
+      .hasUniqueness(Seq("dk_second", "dk_name"), Assertion.GreaterThan(0.9), NullMode.IncludeAsOne)
+      .hasDistinctness(Seq("dk_second"), Assertion.Equals(0.2))
+      .hasQuantile("dk_amount", 0.9, Assertion.GreaterThan(200.0))
+      .isComplete("dk_second")
+      .hasMean("dk_amount", Assertion.Equals(150.75))
+      .build()
+    val constraints = check.constraints
+    val standalone = constraints.map(_.evaluate(keyed))
+    var batched = Seq.empty[ConstraintResult]
+    val scans = executedAggregations("dk_id") {
+      batched = ValidationSuite.evaluateBatched(keyed, constraints)
+    }
+    batched.zip(standalone).foreach { case (b, s) =>
+      assert(b.status == s.status && b.metric == s.metric, s"${b.constraint}: $b vs $s")
+    }
+    assert(batched.forall(_.isSuccess), batched)
+    // No aggregate node that groups by a key carries a percentile_approx buffer.
+    val grouped = scans.flatten.filter(_._1.nonEmpty)
+    assert(grouped.nonEmpty && grouped.forall(!_._2), scans)
+    // Two scans: the plain one (both quantiles, no grouping at all) and one DISTINCT
+    // scan carrying all three key sets — {dk_id} shared by the primary key and
+    // isUnique, {dk_second}, and the multi-column struct key.
+    assert(scans.size == 2, scans)
+    val keySets = scans.map(_.flatMap(_._1).toSet)
+    assert(keySets.count(_.isEmpty) == 1, keySets)
+    assert(keySets.count(ks => ks.contains("dk_id") && ks.contains("dk_second")) == 1, keySets)
+    assert(scans.filter(_.exists(_._2)).map(_.forall(_._1.isEmpty)) == Seq(true), scans)
+  }
+
+  test("an analysis failure in a DISTINCT group stays in that group") {
+    import org.apache.spark.sql.functions.{col, countDistinct, max}
+    // Same distinct key as the primary key, plus a column that does not exist.
+    val broken = new Constraint {
+      val name = "broken distinct"
+      val aggregates = Seq(countDistinct(col("dk_id")), max(col("no_such_column")))
+      def fromAggregates(values: Seq[Any]): ConstraintResult =
+        success(MetricValue.LongMetric(0L))
+    }
+    val constraints: Seq[Constraint] = Seq(
+      SizeConstraint(Assertion.Equals(200)),
+      PrimaryKeyConstraint(Seq("dk_id")),
+      broken,
+      StatisticConstraint("dk_amount", Stat.Median, Assertion.Between(100.0, 200.0)),
+      CompletenessConstraint("dk_name", Assertion.LessThan(1.0)))
+    var results = Seq.empty[ConstraintResult]
+    val scans = executedAggregations("dk_id") {
+      results = ValidationSuite.evaluateBatched(keyed, constraints)
+    }
+    assert(results(2).status == ConstraintStatus.Failure)
+    assert(results(2).message.contains("evaluation error"), results(2))
+    Seq(0, 1, 3, 4).foreach(i => assert(results(i).isSuccess, results(i)))
+    // The plain group ran once, as one scan; only the DISTINCT group went through
+    // the fallback, which re-ran its healthy primary key as one scan.
+    val keySets = scans.map(_.flatMap(_._1).toSet)
+    assert(keySets.count(_.isEmpty) == 1, keySets)
+    assert(keySets.count(_ == Set("dk_id")) == 1, keySets)
+    assert(keySets.size == 2, keySets)
+
+    // SQL text that does not parse cannot be keyed; it fails alone as well.
+    val unparsable = ComplianceConstraint("unparsable", org.apache.spark.sql.functions.expr("dk_id >>> ("),
+      Assertion.Equals(1.0))
+    val rs = ValidationSuite.evaluateBatched(keyed, Seq(unparsable, PrimaryKeyConstraint(Seq("dk_id"))))
+    assert(rs.head.message.contains("evaluation error"), rs.head)
+    assert(rs(1).isSuccess, rs(1))
+  }
+
+  test("a listener that aborts the run leaves no submitted job running") {
+    val finished = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val slow = new MultiJobConstraint {
+      val name = "slow multi-job"
+      override def evaluate(d: org.apache.spark.sql.DataFrame): ConstraintResult = {
+        Thread.sleep(500)
+        val n = d.count()
+        finished.set(true)
+        success(MetricValue.LongMetric(n))
+      }
+    }
+    val aborting = new ValidationListener {
+      def onConstraintComplete(r: ConstraintResult): Unit = throw new IllegalStateException("abort")
+      def onSuiteComplete(name: String, m: ValidationMetrics): Unit = ()
+    }
+    // The batched size constraint completes first; its callback throws while the
+    // multi-job constraint is still sleeping.
+    val e = intercept[IllegalStateException] {
+      ValidationSuite.evaluateBatched(keyed, Seq(SizeConstraint(Assertion.Equals(200)), slow), aborting)
+    }
+    assert(e.getMessage == "abort")
+    assert(finished.get, "the multi-job constraint was still running after the run aborted")
   }
 }
