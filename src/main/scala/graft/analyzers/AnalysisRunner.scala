@@ -1,7 +1,9 @@
 package graft.analyzers
 
-import graft.core.MetricValue
+import graft.core.{MetricValue, SharedScan}
 import org.apache.spark.sql.DataFrame
+
+import scala.util.control.NonFatal
 
 /** Metric results keyed by analyzer key (reference: analyzers/runner.rs:47-205). */
 final case class AnalyzerContext(
@@ -11,74 +13,28 @@ final case class AnalyzerContext(
   def metric(key: String): Option[MetricValue] = metrics.get(key)
 }
 
-/** Runs a set of analyzers over one DataFrame, batching ALL their state aggregates into
-  * a single scan — the shared-scan grouping the reference left as a TODO
-  * (analyzers/runner.rs:159).
+/** Runs a set of analyzers over one DataFrame, batching their state aggregates through
+  * one [[graft.core.SharedScan]] — the shared-scan grouping the reference left as a TODO
+  * (analyzers/runner.rs:159). Its groups run inline.
   */
 final class AnalysisRunner(analyzers: Seq[Analyzer[_]], continueOnError: Boolean = true) {
 
   def run(df: DataFrame): AnalyzerContext = {
-    val allAggs = analyzers.flatMap(_.stateAggregates)
-    val batched: Option[Seq[Any]] =
+    val values = SharedScan.run(df, analyzers.map(_.stateAggregates))
+    // continueOnError=false must PROPAGATE an analyzer's own failure — converting it to
+    // an errors-map entry made callers (e.g. the incremental runner's ctx.states(key))
+    // die later with a key-not-found that masks the root cause. NonFatal only, like
+    // the shared scan's own fallback.
+    val results = analyzers.zip(values).map { case (a, r) =>
       try {
-        if (allAggs.isEmpty) Some(Nil)
-        else {
-          // Chunk on ANALYZER boundaries (one analyzer's count/sum slots must come
-          // from the same scan/snapshot), capped like ValidationSuite.MaxAggsPerJob so
-          // a wide suite doesn't blow whole-stage codegen's method-size limit and
-          // silently fall back to interpreted execution.
-          val maxAggs = graft.core.ValidationSuite.MaxAggsPerJob
-          val groups = scala.collection.mutable.ArrayBuffer(
-            scala.collection.mutable.ArrayBuffer.empty[Analyzer[_]])
-          analyzers.filter(_.stateAggregates.nonEmpty).foreach { a =>
-            val cur = groups.last
-            val width = cur.map(_.stateAggregates.size).sum
-            if (cur.nonEmpty && width + a.stateAggregates.size > maxAggs)
-              groups += scala.collection.mutable.ArrayBuffer(a)
-            else cur += a
-          }
-          // Values are reassembled in the ORIGINAL analyzers order (the positional
-          // slice below depends on it); grouping is order-preserving.
-          Some(groups.filter(_.nonEmpty).toSeq.flatMap { g =>
-            val aggs = g.toSeq.flatMap(_.stateAggregates)
-            val aliased = aggs.zipWithIndex.map { case (c, i) => c.as(s"a$i") }
-            df.agg(aliased.head, aliased.drop(1): _*).head().toSeq
-          })
-        }
-      } catch {
-        // NonFatal only: swallowing an OutOfMemoryError/interrupt here would answer a
-        // dying cluster by immediately launching N more per-analyzer fallback jobs.
-        case scala.util.control.NonFatal(_) if continueOnError => None
-      }
-
-    // continueOnError=false must PROPAGATE per-analyzer failures — converting them to
-    // errors-map entries made callers (e.g. the incremental runner's ctx.states(key))
-    // die later with a key-not-found that masks the root cause. NonFatal only, matching
-    // the shared-scan catch above (catching InterruptedException would keep launching
-    // jobs on a cluster being torn down).
-    def attempt(a: Analyzer[_])(body: => Any): Either[(String, String), (String, MetricValue, Any)] =
-      try {
-        val s = body
+        val s: Any = r.fold(e => throw e, a.stateFromValues)
         Right((a.key, a.metricFromAnyState(s), s))
       } catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           if (!continueOnError) throw e
           Left(a.key -> e.getMessage)
       }
-
-    val results: Seq[Either[(String, String), (String, MetricValue, Any)]] = batched match {
-      case Some(values) =>
-        var offset = 0
-        analyzers.map { a =>
-          val vs = values.slice(offset, offset + a.stateAggregates.size)
-          offset += a.stateAggregates.size
-          attempt(a)(a.stateFromValues(vs))
-        }
-      case None =>
-        // Shared job failed (e.g. one analyzer referenced a bad column): isolate.
-        analyzers.map(a => attempt(a)(a.computeState(df)))
     }
-
     AnalyzerContext(
       metrics = results.collect { case Right((k, m, _)) => k -> m }.toMap,
       states = results.collect { case Right((k, _, s)) => k -> s }.toMap,

@@ -30,7 +30,7 @@ trait Analyzer[S <: AnalyzerState[S]] extends Serializable {
   def legacyKeys: Seq[String] = Nil
 
   /** Aggregate expressions whose collected values define the state — batched with other
-    * analyzers into one scan by [[AnalysisRunner]].
+    * analyzers by [[AnalysisRunner]] through [[graft.core.SharedScan]].
     */
   def stateAggregates: Seq[Column]
   def stateFromValues(values: Seq[Any]): S

@@ -1,6 +1,6 @@
 package graft.analyzers
 
-import graft.core.{Histogram, HistogramBucket}
+import graft.core.{Histogram, HistogramBucket, SharedScan}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,7 +35,7 @@ final case class ProfilerConfig(
     approxDistinctRsd: Double = 0.05)
 
 /** Three-pass profiler mirroring the reference's structure (profiler.rs:230-250), with
-  * pass 1 batched across ALL columns in one scan:
+  * passes 1 and 3 batched across ALL columns through one [[graft.core.SharedScan]] each:
   *  1. basic stats for every column in a single aggregation;
   *  2. categorical histograms only for columns whose approx cardinality permits;
   *  3. quantiles for all numeric columns in one aggregation.
@@ -49,14 +49,18 @@ final class ColumnProfiler(config: ProfilerConfig = ProfilerConfig()) {
     def isNumeric(t: DataType) = t.isInstanceOf[NumericType]
     def isString(t: DataType) = t == StringType
 
-    // ---- pass 1: one scan for all basic stats, chunked on COLUMN boundaries ----
+    // ---- pass 1: basic stats for every column, one owner per column in a SharedScan ----
     // Every reference goes through SqlIdent: the names come from df.columns, so a
     // literal dot/backtick in a name must stay literal — a bare col("user.name")
     // parses the dot as struct-field access and aborts the whole profile.
+    // Each column lists its own row count: the scan computes it once per job, and a
+    // column's stats and the total they are compared against always come from one job
+    // (never nonNull > total, completeness > 1.0, from two table states).
     def c0(c: String) = col(graft.core.SqlIdent(c))
-    val perColAggs: Seq[(String, Seq[(String, Column)])] = targets.map { c =>
+    val perColAggs: Seq[Seq[(String, Column)]] = targets.map { c =>
       val t = schema(c)
       val base = Seq(
+        "total" -> count(lit(1)),
         "nonNull" -> count(c0(c)),
         "approxDistinct" -> approx_count_distinct(c0(c), config.approxDistinctRsd))
       val num = if (isNumeric(t)) Seq(
@@ -65,55 +69,29 @@ final class ColumnProfiler(config: ProfilerConfig = ProfilerConfig()) {
       val str = if (isString(t)) Seq(
         "minLen" -> min(length(c0(c))), "maxLen" -> max(length(c0(c))),
         "avgLen" -> avg(length(c0(c)))) else Nil
-      c -> (base ++ num ++ str)
+      base ++ num ++ str
     }
-    // Chunked like ValidationSuite.evaluateBatched — and, like there, never splitting
-    // one column's aggregates (or separating them from the row count they're compared
-    // against) across two scans: data changing between sequential jobs would yield
-    // nonNull > total (completeness > 1.0) or min > max within one profile. Each
-    // chunk carries its OWN count(*), so every column's total comes from its scan.
-    val maxAggs = 200
-    val chunks = scala.collection.mutable.ArrayBuffer(
-      scala.collection.mutable.ArrayBuffer.empty[(String, Seq[(String, Column)])])
-    perColAggs.foreach { ca =>
-      val cur = chunks.last
-      val width = cur.map(_._2.size).sum
-      if (cur.nonEmpty && width + ca._2.size + 1 > maxAggs)
-        chunks += scala.collection.mutable.ArrayBuffer(ca)
-      else cur += ca
-    }
-    val statMap = scala.collection.mutable.Map.empty[(String, String), Any]
-    chunks.filter(_.nonEmpty).foreach { group =>
-      val slots: Seq[((String, String), Column)] =
-        (("", "total") -> count(lit(1))) +:
-          group.toSeq.flatMap { case (name, as) => as.map { case (w, e) => (name, w) -> e } }
-      val aliased = slots.zipWithIndex.map { case ((_, e), i) => e.as(s"p$i") }
-      val row = df.agg(aliased.head, aliased.drop(1): _*).head()
-      slots.zipWithIndex.foreach {
-        case ((("", "total"), _), i) =>
-          group.foreach { case (name, _) => statMap((name, "total")) = row.get(i) }
-        case (((cname, what), _), i) => statMap((cname, what)) = row.get(i)
-      }
-    }
-    def get(c: String, what: String): Option[Any] = statMap.get((c, what)).filter(_ != null)
+    def values(owners: Seq[Seq[Column]]): Seq[Seq[Any]] =
+      SharedScan.run(df, owners).map(_.fold(e => throw e, identity))
+    val stats: Map[String, Map[String, Any]] =
+      targets.zip(perColAggs).zip(values(perColAggs.map(_.map(_._2)))).map {
+        case ((c, aggs), vs) => c -> aggs.map(_._1).zip(vs).toMap
+      }.toMap
+    def get(c: String, what: String): Option[Any] = stats(c).get(what).filter(_ != null)
     def getD(c: String, what: String): Option[Double] =
       get(c, what).flatMap(graft.core.Num.toDouble)
     def getL(c: String, what: String): Option[Long] =
       get(c, what).flatMap(graft.core.Num.toLong)
 
-    // ---- pass 3 (batched): quantiles for all numeric columns in one agg ----
+    // ---- pass 3: quantiles for all numeric columns, one owner per column ----
     val numericCols = targets.filter(c => isNumeric(schema(c)))
+    val quantileAggs = numericCols.map(c =>
+      Seq(percentile_approx(c0(c), array(config.quantiles.map(lit): _*), lit(10000))))
     val quantileMap: Map[String, Map[Double, Double]] =
-      if (numericCols.isEmpty) Map.empty
-      else {
-        val qCols = numericCols.map(c =>
-          percentile_approx(c0(c), array(config.quantiles.map(lit): _*), lit(10000)).as(s"q_$c"))
-        val qRow = df.agg(qCols.head, qCols.drop(1): _*).head()
-        numericCols.zipWithIndex.map { case (c, i) =>
-          val arr = Option(qRow.get(i)).map(_.asInstanceOf[scala.collection.Seq[Any]]).getOrElse(Nil)
-          c -> config.quantiles.zip(arr.flatMap(graft.core.Num.toDouble)).toMap
-        }.toMap
-      }
+      numericCols.zip(values(quantileAggs)).map { case (c, vs) =>
+        val arr = Option(vs.head).map(_.asInstanceOf[scala.collection.Seq[Any]]).getOrElse(Nil)
+        c -> config.quantiles.zip(arr.flatMap(graft.core.Num.toDouble)).toMap
+      }.toMap
 
     // ---- pass 2 + inference: per-column jobs, submitted CONCURRENTLY (bounded pool,
     // same rationale as ValidationSuite's multi-job constraints — each job rarely
@@ -138,9 +116,9 @@ final class ColumnProfiler(config: ProfilerConfig = ProfilerConfig()) {
           // Ratio over NON-NULL values, matching HistogramConstraint / the reference's
           // count / (total_cnt - null_cnt). The denominator is the SAME SCAN's bucket
           // sum, not pass 1's nonNull: rows appended between the two jobs would make
-          // a cross-scan ratio exceed 1.0 (the hazard the pass-1 chunking comment
-          // defends within a scan). Sound because the un-truncated branch collected
-          // EVERY group — the sum is exactly this scan's non-null count.
+          // a cross-scan ratio exceed 1.0 (the hazard pass 1 avoids within a scan).
+          // Sound because the un-truncated branch collected EVERY group — the sum is
+          // exactly this scan's non-null count.
           val denom = buckets.values.sum.toDouble
           Some(Histogram(
             buckets.map { case (v, n) =>

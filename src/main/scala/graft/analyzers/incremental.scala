@@ -172,17 +172,17 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
     store.listPartitions(analyzerKey).filterNot(_ == CumulativeKey)
   }
 
+  // The cumulative record is stamped with how many partition states produced it, so
+  // the fast fold path can detect a stale cumulative (deleted partitions, legacy or
+  // crash-window records) with one directory listing.
+  private val NPartsField = "__nparts"
+
   /** Rebuild an analyzer's cumulative state as the merge of ALL stored data-partition
     * states and persist it. Deriving the cumulative from the per-partition states —
     * instead of folding each new state into it — makes every write path idempotent:
     * replaying a partition (at-least-once `foreachBatch`) or re-analyzing it with
     * corrected data overwrites that partition's state and can never double-count.
     */
-  // The cumulative record is stamped with how many partition states produced it, so
-  // the fast fold path can detect a stale cumulative (deleted partitions, legacy or
-  // crash-window records) with one directory listing.
-  private val NPartsField = "__nparts"
-
   private def rebuildCumulative(a: Analyzer[_]): Option[Any] = {
     val states = dataPartitions(a.key)
       .flatMap(p => store.load(a.key, p)).map(a.stateFromFields)
@@ -225,11 +225,6 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
       }
     }
 
-  /** Analyze one new partition; returns metrics over (history ∪ partition). All
-    * analyzers' states come from ONE scan of the partition (AnalysisRunner batching) —
-    * the per-analyzer-scan shape the reference fell back to is a linear job-count tax.
-    * Idempotent under replay of the same `partitionKey` (see [[rebuildCumulative]]).
-    */
   /** Whether any analyzer already has stored state under `partitionKey` — lets sinks
     * distinguish a first ingest from an overwrite (replay or checkpoint-reset
     * collision) before committing. One point-read, short-circuiting.
@@ -237,6 +232,11 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
   def hasPartitionState(partitionKey: String): Boolean =
     analyzers.exists(a => store.load(a.key, partitionKey).isDefined)
 
+  /** Analyze one new partition; returns metrics over (history ∪ partition). All
+    * analyzers' states come from ONE scan of the partition (AnalysisRunner batching) —
+    * the per-analyzer-scan shape the reference fell back to is a linear job-count tax.
+    * Idempotent under replay of the same `partitionKey` (see [[rebuildCumulative]]).
+    */
   def analyzePartition(df: DataFrame, partitionKey: String): Map[String, MetricValue] = {
     require(partitionKey != CumulativeKey && partitionKey != NullKey,
       s"partition key '$partitionKey' collides with a reserved state-store key")

@@ -7,10 +7,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * Unlike the reference (term-guard/src/core/constraint.rs:186-225), which builds SQL
   * strings per constraint and runs each against DataFusion, graft constraints are
   * *expression factories*: a constraint contributes aggregate [[Column]]s that the suite
-  * runner batches into at most two `df.agg(...)` scans, a plain one and one for exact
-  * DISTINCT aggregates (what the reference's dead-code optimizer intended —
-  * term-guard/src/optimizer/combiner.rs:170-230), plus a pure post-processor from the
-  * collected values to a [[ConstraintResult]].
+  * runner batches through [[SharedScan]] (what the reference's dead-code optimizer
+  * intended — term-guard/src/optimizer/combiner.rs:170-230), plus a pure post-processor
+  * from the collected values to a [[ConstraintResult]].
   *
   * Constraints whose shape cannot share the single global aggregation (groupBy-based,
   * join-based, window-based) extend [[MultiJobConstraint]] and run their own Spark job.
@@ -19,7 +18,7 @@ trait Constraint extends Serializable {
   /** Human-readable constraint name used in reports. */
   def name: String
 
-  /** Aggregate expressions to evaluate in the shared single-scan aggregation.
+  /** Aggregate expressions to evaluate in the shared scan ([[SharedScan]]).
     * Empty iff the constraint needs its own job ([[MultiJobConstraint]]).
     */
   def aggregates: Seq[Column]

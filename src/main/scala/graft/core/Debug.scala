@@ -149,12 +149,11 @@ object DebugValidation {
               scanEst = leafRowEstimate(agg)
               if (level == DebugLevel.Verbose)
                 values = row.toSeq.map(String.valueOf).toVector
-              safeResult(c)(c.fromAggregates(row.toSeq))
+              ValidationSuite.safeResult(c)(c.fromAggregates(row.toSeq))
             } catch {
               case e: Exception =>
                 durMs = (System.nanoTime() - tC0) / 1000000
-                ConstraintResult(c.name, ConstraintStatus.Failure, None,
-                  s"evaluation error: ${e.getMessage}")
+                ValidationSuite.errorResult(c, e)
             }
           } else {
             // Multi-job constraint: it builds its own frames internally, so observe
@@ -173,7 +172,7 @@ object DebugValidation {
             }
             if (level != DebugLevel.Basic) spark.listenerManager.register(qel)
             try {
-              val r = safeResult(c)(c.evaluate(df))
+              val r = ValidationSuite.safeResult(c)(c.evaluate(df))
               durMs = (System.nanoTime() - tC0) / 1000000
               r
             } finally if (level != DebugLevel.Basic) {
@@ -195,25 +194,10 @@ object DebugValidation {
       }
       CheckResult(check, results)
     }
-    val all = checkResults.flatMap(_.constraintResults)
-    val issues = checkResults.flatMap { cr =>
-      cr.constraintResults.filter(_.isFailure).map(r =>
-        ValidationIssue(cr.check.description, cr.check.level, r.constraint, r.message))
-    }
     val totalMs = (System.nanoTime() - t0) / 1000000
-    val metrics = ValidationMetrics(all.size, all.count(_.isSuccess),
-      all.count(_.isFailure), all.count(_.status == ConstraintStatus.Skipped), totalMs)
-    val report = ValidationReport(suite.name, checkResults, metrics, issues)
+    val report = ValidationReport.fromChecks(suite.name, checkResults, totalMs)
     DebugReport(suite.name, level, timeline.result(), report, totalMs)
   }
-
-  private def safeResult(c: Constraint)(f: => ConstraintResult): ConstraintResult =
-    try f
-    catch {
-      case e: Exception =>
-        ConstraintResult(c.name, ConstraintStatus.Failure, None,
-          s"evaluation error: ${e.getMessage}")
-    }
 
   /** Estimated rows entering the job: sum of the optimized plan's LEAF row-count
     * stats (the scan estimate), when every leaf has one. The plan OUTPUT estimate

@@ -3,6 +3,7 @@ package graft
 import graft.analyzers._
 import graft.core.MetricValue
 import graft.repository._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Analyzer states: merge(partition states) must equal state(full data) — the
@@ -161,6 +162,39 @@ class AnalyzerSpec extends SparkSpec {
     val ctx = new AnalysisRunner(Seq(SizeAnalyzer(), MeanAnalyzer("nope"))).run(full)
     assert(d(ctx.metrics("size.*")) == 1000.0)
     assert(ctx.errors.contains("mean.nope"))
+
+    // The healthy rest of a failed batch runs as one scan, not one scan per analyzer.
+    val healthy: Seq[Analyzer[_]] = Seq(SizeAnalyzer(), CompletenessAnalyzer("y"), MeanAnalyzer("x"))
+    val clean = new AnalysisRunner(healthy).run(full)
+    val oneScan = jobsOf(SizeAnalyzer().computeState(full))
+    var mixed: AnalyzerContext = null
+    val fallback = jobsOf { mixed = new AnalysisRunner(healthy :+ MeanAnalyzer("nope")).run(full) }
+    assert(oneScan > 0 && fallback == oneScan, s"fallback ran $fallback jobs, one scan runs $oneScan")
+    assert(mixed.errors.keySet == Set("mean.nope") && mixed.errors("mean.nope").contains("nope"),
+      mixed.errors)
+    assert(mixed.metrics == clean.metrics && mixed.states == clean.states)
+    assert(d(mixed.metrics("size.*")) == 1000.0)
+    assert(math.abs(d(mixed.metrics("completeness.y")) - 0.75) < 1e-12)
+    assert(math.abs(d(mixed.metrics("mean.x")) - 250.25) < 1e-9)
+  }
+
+  /** Spark jobs started by `f`, counted under a job group of their own. */
+  private def jobsOf(f: => Unit): Int = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "job count")
+    try f finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 10000L)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get()
   }
 
   test("incremental runner: per-partition ingest accumulates correctly") {

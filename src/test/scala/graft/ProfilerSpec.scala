@@ -40,6 +40,26 @@ class ProfilerSpec extends SparkSpec {
     assert(n.quantiles(0.5) > n.min && n.quantiles(0.5) < n.max)
   }
 
+  test("a profile wider than MaxAggsPerJob equals each column profiled alone") {
+    // 40 numeric columns: pass 1 lists 7 aggregates per column, 241 distinct slots once
+    // the shared row count is deduplicated, so it runs as two scans. One partition keeps
+    // the floating-point merges (mean, stddev) in a fixed order.
+    val nCols = 40
+    val wide = spark.range(0, 150, 1, 1).select((0 until nCols).map { i =>
+      val v = if (i % 10 == 0) col("id") % 7 else col("id") * (i + 1)
+      when(col("id") % (i % 5 + 2) === 0, lit(null)).otherwise(v).as(s"c$i")
+    }: _*)
+    assert(nCols * 6 + 1 > SharedScan.MaxAggsPerJob)
+    val profiler = new ColumnProfiler()
+    val together = profiler.profile(wide)
+    assert(together.size == nCols)
+    (0 until nCols).map(i => s"c$i").foreach { c =>
+      val alone = profiler.profile(wide, Seq(c))(c)
+      assert(together(c) == alone, c)
+      assert(alone.totalCount == 150 && alone.numeric.exists(_.quantiles.size == 5), alone)
+    }
+  }
+
   test("profiler survives columns whose names contain literal dots") {
     import spark.implicits._
     // The names come from df.columns — col("user.name") would parse the dot as a

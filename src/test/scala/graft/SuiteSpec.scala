@@ -186,7 +186,7 @@ class SuiteSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // 230 columns → 230 completeness constraints → 231 distinct aggregate slots,
     // crossing the MaxAggsPerJob=200 chunking boundary (codegen-width guard).
-    val nCols = ValidationSuite.MaxAggsPerJob + 30
+    val nCols = SharedScan.MaxAggsPerJob + 30
     val wide = spark.range(50).select(
       (0 until nCols).map(i => when(col("id") % 2 === 0 || i % 3 != 0, col("id") + i)
         .otherwise(lit(null)).as(s"c$i")): _*)
