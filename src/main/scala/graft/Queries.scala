@@ -5016,14 +5016,6 @@ object Queries {
   def oracleSql: Map[String, String] =
     (defs ++ llmDefs ++ sqlSurfaceDefs ++ pipelineDefs ++ corpusStatsDefs ++ splitDefs).flatMap(q => q.oracle.map(q.name -> expandOracleMacros(_))).toMap
 
-  /** Operator-only arms for the bench queries whose `queries()` formulation bundles
-    * an EXACT verification replica alongside the approximate operator (the gated
-    * `ok`-boolean oracle pattern). The full query's time overstates what a real user
-    * pays — e.g. contamination_firewall's exact side is three tokenizing corpus
-    * scans next to the operator's one — so Bench times these arms separately and
-    * reports operator vs verification seconds. Each arm is exactly the operator
-    * surface a production caller would run, with a bounded driver-side result.
-    */
   /** Compute-bound CPU-scaling proof arm (bench-only; round-14 verdict item 2 —
     * NOT a declared oracle query). Every reported bench arm at sf0.1 is
     * exchange-latency/overhead-bound, so the driver's low-core bench run could
@@ -5057,6 +5049,16 @@ object Queries {
       .agg(coalesce(expr("bit_xor(xxhash64(_sig, _r))"), lit(0L)).as("sig_check"))
   }
 
+  /** Operator-only arms for the bench queries whose `queries()` formulation bundles
+    * an EXACT verification replica alongside the approximate operator (the gated
+    * `ok`-boolean oracle pattern). The full query's time overstates what a real user
+    * pays — e.g. contamination_firewall's exact side is three tokenizing corpus
+    * scans next to the operator's one — so Bench times each arm with the full query's
+    * protocol and publishes `op_verify_sec`: operator seconds, and the full query's
+    * remainder as verification seconds (so every key is also a `queries()` key).
+    * Each arm is exactly the operator surface a production caller would run, with a
+    * bounded driver-side result.
+    */
   def operatorArms: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Bloom build + flag rollup: ONE probe scan + ONE corpus scan. The dropped
     // exact arm re-tokenizes probe AND corpus and shuffles every gram hash.

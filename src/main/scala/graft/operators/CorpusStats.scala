@@ -56,9 +56,10 @@ object CorpusStats {
     val toks = base.select(col(idCol).as("_id"),
       explode(TextFunctions.tokens(col(textCol))).as("token"))
     // tf feeds BOTH the scoring join and the document-frequency rollup. Measured
-    // round 8 (ScratchTfidf, sf0.1 + synthetic 10x): eagerly materializing it
-    // (localCheckpoint) beats the two-pass re-scan at BOTH scales — 1.13→0.87 s at
-    // sf0.1 and 3.04→1.42 s at 10x (scan+tokenize+shuffle twice costs more than
+    // round 8 (ScratchTfidf in PLANS.md's deleted-tools index, sf0.1 + synthetic
+    // 10x): eagerly materializing it (localCheckpoint) beats the two-pass re-scan
+    // at BOTH scales — 1.13→0.87 s at sf0.1 and 3.04→1.42 s at 10x
+    // (scan+tokenize+shuffle twice costs more than
     // one block-manager write of the (doc,token) frame; post-agg tf is also far
     // smaller than the exploded token stream). Lineage truncation is the accepted
     // trade of every localCheckpoint in this module (bigramSurprisal's counts):

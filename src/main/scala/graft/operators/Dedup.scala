@@ -134,9 +134,9 @@ object Dedup {
     // (shingle, seed) — numHashes multiplies per shingle that a table computed
     // once per UDF construction provides. Inlined mix is seedMix verbatim after
     // that substitution, so signatures stay bit-identical (pinned by the
-    // ScratchKernelBench identity sweep + the kernel differential in
-    // OperatorSpec). Measured single-thread on 20k sf10 texts: 1.84 -> 1.63 s
-    // (~10%); dedupe-first and unroll-x2 variants measured no better / worse.
+    // reference-kernel differential in PropertySpec). Measured single-thread on
+    // 20k sf10 texts: 1.84 -> 1.63 s (~10%); dedupe-first and unroll-x2 variants
+    // measured no better / worse (ScratchKernelBench, PLANS.md deleted-tools index).
     val seedC = Array.tabulate(numHashes)(j => 0x9e3779b97f4a7c15L * (j + 1))
     val f = udf { (t: String) =>
       if (t == null) null

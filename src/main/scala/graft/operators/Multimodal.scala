@@ -1505,9 +1505,10 @@ object Multimodal {
     // (RemoveRedundantAggregates drops the pair distinct under the duplicate-
     // insensitive rollup; RewriteDistinctAggregates plans the single distinct
     // agg without any Expand), so before/after plans are identical and the
-    // same-JVM A/B is a wash (ScratchClipRollup: old 2.44 vs new 2.29 s min,
-    // identical 335,340-row output). Kept explicit so the plan shape is pinned
-    // by construction, not by two optimizer rules firing.
+    // same-JVM A/B is a wash (ScratchClipRollup, PLANS.md deleted-tools index:
+    // old 2.44 vs new 2.29 s min, identical 335,340-row output; the equivalence is
+    // pinned in MultimodalSpec's clip rollup differential). Kept explicit so the
+    // plan shape is pinned by construction, not by two optimizer rules firing.
     val framePairs = Dedup.bandedHammingPairs(frameRows, maxHamming, maxBucketSize,
       newFlagCol = newFlagCol, dedup = false)
     // cross-clip only (a clip's own repeated frames are not a duplicate relation).

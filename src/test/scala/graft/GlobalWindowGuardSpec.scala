@@ -14,8 +14,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Wind
   *    That plan executes eagerly inside its operator and is pinned by its own
   *    plan-shape test (ConstraintSpec) — it never appears in a returned frame here.
   *
-  * Because those two are benign, [[Bench]] silences the WindowExec warning logger —
-  * which would otherwise train readers to ignore it. THIS spec is what keeps that
+  * Because those two are benign, [[Bench]] filters that one WindowExec warning out
+  * of its log — it would otherwise train readers to ignore it. THIS spec keeps that
   * silencing honest: every `queries()` plan is swept for un-partitioned Window
   * nodes, and any query not documented below fails RED. Adding a new global window
   * means auditing it and either partitioning it or documenting it here with the
@@ -35,7 +35,7 @@ class GlobalWindowGuardSpec extends SparkSpec {
     val sf = "/root/testdata/sf0.001"
     def globalWindows(p: LogicalPlan): Seq[LWindow] =
       p.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
-    // Bench times operatorArms under the same silenced logger, so arms are swept
+    // Bench times operatorArms under the same filtered logger, so arms are swept
     // too — a global window in an arm must fail here, not hide muted.
     val surfaces = Queries.queries.toSeq.sortBy(_._1) ++
       Queries.operatorArms.toSeq.sortBy(_._1).map { case (n, fn) => (s"$n (arm)", fn) }

@@ -680,6 +680,20 @@ class MultimodalSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .toSet
     assert(got == expected, s"rollup disagrees with brute force:\n got $got\n exp $expected")
+    // The round-14 rollup shape it replaced (pair distinct, then countDistinct of the
+    // A-frames) over an exhaustive frame self-join, each pair doubled the way band
+    // collisions repeat it, must give the same rows.
+    val frames = Multimodal.videoFrameHashes(clips, "id", "clip", decoder)
+    val framePairs = frames.as("a").join(frames.as("b"), col("a.id") < col("b.id"))
+      .select(col("a.id").as("_ca"), col("b.id").as("_cb"), col("a.frame_idx").as("_fa"),
+        col("b.frame_idx").as("_fb"),
+        bit_count(col("a.frame_hash").bitwiseXOR(col("b.frame_hash"))).as("hamming"))
+      .filter(col("hamming") <= 3)
+    val oldShape = framePairs.unionByName(framePairs).distinct()
+      .groupBy(col("_ca"), col("_cb"))
+      .agg(countDistinct(col("_fa")).as("matching_frames"), min(col("hamming")).as("min_hamming"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
+    assert(oldShape == got, s"old rollup shape disagrees:\n old $oldShape\n new $got")
     // incremental path shares clipPairsFromFrameRows: new = odd ids, index = even
     val idx = Multimodal.videoFrameHashIndex(
       clips.filter(col("id") % 20 === 0), "id", "clip", decoder)

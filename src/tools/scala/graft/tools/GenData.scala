@@ -94,7 +94,8 @@ object GenData {
       // bucket histogram hit 13k-doc buckets and ~7e8 intra-bucket pairs — a
       // generator artifact (text diversity frozen while docs grow 100x), not
       // a corpus shape real crawls have. With the tail, post-guard LSH
-      // candidates measure ~5M at 500k docs (measured: ScratchNgramSf10)
+      // candidates measure ~5M at 500k docs (ScratchNgramSf10, PLANS.md
+      // deleted-tools index)
       // while planted exact-dup chains still match bit-for-bit.
       if (r % 5 < 3) {
         sb.append(Vocab(((r >>> 3) % Vocab.length).toInt))

@@ -137,10 +137,37 @@ object ScaleSweep {
   // only documents/embeddings/events (lineitem 10× is built separately for the
   // suite20 datapoint); its scale story is the spec-pinned pre-shuffle filter.
 
+  /** The one scaling-ratio loop, shared by every ratio block (this sweep and
+    * [[graft.Bench]]'s sf1/sf10 blocks): a symmetric warm-up on BOTH inputs, so each
+    * measured run is the second read of its dataset and parquet footer caching and
+    * codegen/JIT are paid equally — otherwise the big side eats first-read costs and
+    * every ratio biases high. Then one timed run per side, and min-of-2 on both sides
+    * when the ratio looks bad: a single GC pause / JIT deopt in EITHER run fabricates
+    * a regression (round 8 published an 11x for corpus_report that re-measured
+    * isolated at 0.9x). Returns (smallSec, bigSec).
+    */
+  def ratio(run: String => Unit, small: String, big: String): (Double, Double) = {
+    def time(dir: String): Double = {
+      val t0 = System.nanoTime(); run(dir); (System.nanoTime() - t0) / 1e9
+    }
+    time(small); time(big)
+    var s = time(small)
+    var b = time(big)
+    if (b / s > 3.0) { s = math.min(s, time(small)); b = math.min(b, time(big)) }
+    (s, b)
+  }
+
+  /** A query as a [[ratio]] arm: collect, not count — count() over a lazy aggregate
+    * lets ColumnPruning drop every aggregate expression, so agg-shaped queries would
+    * time as scan-only.
+    */
+  def collecting(spark: SparkSession,
+      fn: (SparkSession, String) => DataFrame): String => Unit =
+    dir => fn(spark, dir).collect()
+
   /** Run the sweep against `src` on an existing session, returning
     * (name, smallSec, bigSec, ratio) per headliner plus the suite20 10× datapoint.
-    * Callable from [[graft.Bench]] so the ratios land in the per-round bench JSON
-    * (scale regressions gate automatically) as well as from the standalone main.
+    * [[graft.Bench]] publishes these ratios as its `sweep10x` block.
     */
   def run(spark: SparkSession, src: String,
       keep: Boolean = false): Seq[(String, Double, Double, Double)] = {
@@ -157,42 +184,26 @@ object ScaleSweep {
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       val selected = subset.fold(Queries)(s => Queries.filter(s))
       val results = selected.map { name =>
-        val fn = SparkEntry.queries(name)
-        // Symmetric warmup on BOTH inputs: each measured run is the second read of its
-        // dataset, so parquet footer/metadata caching and codegen/JIT are paid equally
-        // — otherwise the sf1 side eats first-read costs and every ratio biases high.
-        time(fn(spark, src))
-        time(fn(spark, out))
-        var small = time(fn(spark, src))
-        var big = time(fn(spark, out))
-        // Retry once when the ratio looks bad: a single GC pause / JIT deopt in
-        // EITHER measured run fabricates a regression (round 8 published an 11x
-        // for corpus_report that re-measured isolated at 0.9x). min-of-2 on both
-        // sides only for suspicious ratios keeps the sweep cheap in the common case.
-        if (big / small > 3.0) {
-          small = math.min(small, time(fn(spark, src)))
-          big = math.min(big, time(fn(spark, out)))
-        }
-        val ratio = big / small
-        val verdict = if (ratio < 15.0) "ok" else "EXCEEDS 15x BOUND"
-        println(f"[sweep] $name%-34s 1x $small%7.2f s   10x $big%7.2f s   ratio ${ratio}%5.1fx  $verdict")
+        val (small, big) = ratio(collecting(spark, SparkEntry.queries(name)), src, out)
+        val r = big / small
+        val verdict = if (r < 15.0) "ok" else "EXCEEDS 15x BOUND"
+        println(f"[sweep] $name%-34s 1x $small%7.2f s   10x $big%7.2f s   ratio ${r}%5.1fx  $verdict")
         // Localize a watch-zone ratio when an operator-only arm exists: the op
         // arm's own ratio separates "the operator plan degrades at scale" from
         // "the oracle-verify scaffolding does" (round-14: contamination_bloom
         // read 9.25x with no way to tell which side carried it).
-        if (ratio > 6.0) graft.Queries.operatorArms.get(name).foreach { arm =>
-          time(arm(spark, src)); time(arm(spark, out)) // symmetric warmup
-          val oS = time(arm(spark, src)); val oB = time(arm(spark, out))
+        if (r > 6.0) graft.Queries.operatorArms.get(name).foreach { arm =>
+          val (oS, oB) = ratio(collecting(spark, arm), src, out)
           val opR = oB / oS
           // no baked-in verdict: an op ratio NEAR the full ratio means the
           // operator plan itself degrades — the exact case this print detects
           val reading =
-            if (opR < 0.8 * ratio) "gap is the verify side"
+            if (opR < 0.8 * r) "gap is the verify side"
             else "OPERATOR plan itself scales poorly"
           println(f"[sweep-model] $name operator-only 1x $oS%7.2f s   10x $oB%7.2f s" +
-            f"   op_ratio $opR%5.1fx (full ${ratio}%5.1fx — $reading)")
+            f"   op_ratio $opR%5.1fx (full ${r}%5.1fx — $reading)")
         }
-        (name, small, big, ratio)
+        (name, small, big, r)
       }
       // Headline-workload scaling: the 20-constraint suite over 10× lineitem.
       // Verbatim replication is sound here (unlike the dedup tables): the suite is
@@ -200,15 +211,9 @@ object ScaleSweep {
       val li = spark.read.parquet(s"$src/lineitem.parquet")
       (0 until 10).map(_ => li).reduce(_ unionByName _)
         .repartition(32).write.mode("overwrite").parquet(s"$out/lineitem.parquet")
-      val li1 = spark.read.parquet(s"$src/lineitem.parquet")
-      val li10 = spark.read.parquet(s"$out/lineitem.parquet")
-      def suite(df: org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        require(graft.Bench.suite20(df).metrics.totalConstraints == 20)
-        (System.nanoTime() - t0) / 1e9
-      }
-      suite(li1); suite(li10) // symmetric warmup
-      val s1 = suite(li1); val s10 = suite(li10)
+      val (s1, s10) = ratio(dir =>
+        require(graft.Bench.suite20(spark.read.parquet(s"$dir/lineitem.parquet"))
+          .metrics.totalConstraints == 20), src, out)
       println(f"[sweep] suite20_lineitem                   1x $s1%7.2f s   10x $s10%7.2f s   ratio ${s10 / s1}%5.1fx")
       val all = results :+ ("suite20_lineitem_10x", s1, s10, s10 / s1)
       val worst = all.maxBy(_._4)
@@ -236,12 +241,6 @@ object ScaleSweep {
     spark.sparkContext.setLogLevel("WARN")
     try appendProgress(run(spark, src, keep))
     finally spark.stop()
-  }
-
-  private def time(df: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    df.collect() // collect, not count: count() over lazy aggregates prunes the work
-    (System.nanoTime() - t0) / 1e9
   }
 
   private[tools] def build10x(spark: SparkSession, src: String, out: String): Unit = {
