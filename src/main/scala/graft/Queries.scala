@@ -141,7 +141,7 @@ object Queries {
     * maxBucketSize would silently drop every same-seed bucket past ~37x its value
     * and diverge from the oracle's n_pairs arithmetic.
     */
-  private def videoClipFixture(s: SparkSession, d: String): (DataFrame, Long) =
+  private[graft] def videoClipFixture(s: SparkSession, d: String): (DataFrame, Long) =
     mediaFixture(s, d, "vid", "clip") { id =>
       val seed = ((id % 37) + 37) % 37
       graft.operators.Multimodal.MediaCodecs.encodeAnimatedGif(
@@ -166,7 +166,7 @@ object Queries {
     * same-seed bucket past ~37x its value and diverges from the oracles'
     * n_pairs arithmetic.
     */
-  private def mediaBucketGuard(nDocs: Long): Int =
+  private[graft] def mediaBucketGuard(nDocs: Long): Int =
     math.max(10000L, nDocs / 37 * 2 + 16).min(Int.MaxValue).toInt
 
   private def withProbe(s: SparkSession, d: String)(body: Seq[Float] => DataFrame): DataFrame =
@@ -5138,20 +5138,6 @@ object Queries {
       val (media, nDocs) = videoClipFixture(s, d)
       Multimodal.nearDupPairsVideo(media, "doc_id", "clip",
         maxHamming = 3, minMatchingFrames = 2,
-        maxBucketSize = mediaBucketGuard(nDocs))
-        .agg(count(lit(1)).as("n_pairs"))
-    }),
-    // Incremental-video operator arm over the SAME cached clip fixture as the
-    // video_dedup arm (keyed identically, so whichever runs first materializes it
-    // for both): index build + incremental pairing, minus the per-row GIF-sequence
-    // encode and the oracle's arithmetic replays.
-    "incremental_video_dedup_documents" -> ((s, d) => {
-      import graft.operators.Multimodal
-      val (docs, nDocs) = videoClipFixture(s, d)
-      val index = Multimodal.videoFrameHashIndex(docs.filter(col("doc_id") % 2 === 0),
-        "doc_id", "clip")
-      Multimodal.incrementalVideoPairs(docs.filter(col("doc_id") % 2 =!= 0), index,
-        "doc_id", "clip", maxHamming = 3, minMatchingFrames = 2,
         maxBucketSize = mediaBucketGuard(nDocs))
         .agg(count(lit(1)).as("n_pairs"))
     }),

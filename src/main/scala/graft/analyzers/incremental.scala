@@ -2,8 +2,10 @@ package graft.analyzers
 
 import graft.core.MetricValue
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileContext, LocalFileSystem, Options, Path}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.zip.CRC32
 
 /** Persistence of analyzer states keyed by (analyzerKey, partitionKey)
   * (reference: analyzers/incremental/state_store.rs:20-90).
@@ -40,47 +42,50 @@ final class FileSystemStateStore(rootDir: String, spark: SparkSession) extends S
 
   def save(a: String, p: String, fields: Map[String, String]): Unit = {
     val path = pathOf(a, p)
-    val fs = path.getFileSystem(conf)
-    // Write-temp-then-rename-OVERWRITE: a crash (or a reader racing the writer) must
-    // never see a TRUNCATED state file — Codec.decode throws on a half-written line —
-    // and must never see the file MISSING either: a delete-then-rename pair has a
-    // window where load() returns None, which the incremental runner's replay check
-    // would misread as "fresh partition" and double-count the cumulative.
-    // FileContext.rename(OVERWRITE) replaces the target atomically on HDFS/local; on
-    // object stores it is copy-of-a-complete-object, which still never exposes a
-    // partial or missing file.
-    val tmp = new Path(path.getParent, s".${path.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(Codec.encode(fields).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(path.toUri, conf)
-      .rename(tmp, path, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val bytes = Codec.encode(fields)
+    // Write-temp-then-replace: a crash (or a reader racing the writer) must never see
+    // a TRUNCATED state file, and must never see the file MISSING either — load()
+    // returning None mid-replace is read by the incremental runner's replay check as
+    // "fresh partition" and double-counts the cumulative.
+    path.getFileSystem(conf) match {
+      case local: LocalFileSystem =>
+        // Local disk: ONE file written past the checksum layer, then rename(2) over the
+        // target, which replaces it atomically. The in-file CRC line stands in for the
+        // .crc sidecar; a sidecar left by an older writer is deleted first, or the
+        // checksummed reader would verify the new bytes against it.
+        val target = local.pathToFile(path).toPath
+        val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+        Files.createDirectories(target.getParent)
+        Files.write(tmp, bytes)
+        Files.deleteIfExists(local.pathToFile(local.getChecksumFile(path)).toPath)
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+      case fs =>
+        // FileContext.rename(OVERWRITE) is an atomic replace only where the file system
+        // implements it natively (HDFS). Every DelegateToFileSystem store (s3a, gs,
+        // abfs) gets AbstractFileSystem's delete-then-rename: a reader in that window
+        // sees no file. Object stores never expose a partial object either way.
+        val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+        val out = fs.create(tmp, true)
+        try out.write(bytes) finally out.close()
+        FileContext.getFileContext(path.toUri, conf).rename(tmp, path, Options.Rename.OVERWRITE)
+    }
   }
   def load(a: String, p: String): Option[Map[String, String]] = {
     val path = pathOf(a, p)
-    val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) None
-    else {
-      // exists→open is a TOCTOU window: a concurrent delete (e.g. another runner's
-      // legacy-key migration) between the two must read as "no state" per the Option
-      // contract, not abort the whole run with FileNotFoundException.
-      val in = try fs.open(path) catch {
-        case _: java.io.FileNotFoundException => return None
-      }
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(Codec.decode(new String(bytes.toByteArray, StandardCharsets.UTF_8)))
-      } finally in.close()
+    // No exists() probe: a missing file — never written, or deleted concurrently (e.g.
+    // another runner's legacy-key migration) — reads as "no state" per the Option
+    // contract instead of aborting the run with FileNotFoundException.
+    val in = try path.getFileSystem(conf).open(path) catch {
+      case _: java.io.FileNotFoundException => return None
     }
+    try Some(Codec.decode(in.readAllBytes(), path)) finally in.close()
   }
   def listPartitions(a: String): Seq[String] = {
     val dir = new Path(rootDir, sanitize(a))
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName).filter(_.endsWith(".state"))
+    val listed = try dir.getFileSystem(conf).listStatus(dir).toSeq catch {
+      case _: java.io.FileNotFoundException => Nil
+    }
+    listed.map(_.getPath.getName).filter(_.endsWith(".state"))
       .map(n => unsanitize(n.stripSuffix(".state"))).sorted
   }
   def delete(a: String, p: String): Unit = {
@@ -90,16 +95,37 @@ final class FileSystemStateStore(rootDir: String, spark: SparkSession) extends S
   }
 
   private object Codec {
-    // line-oriented k<TAB>v with URL-encoding — no external JSON dependency needed.
-    def encode(m: Map[String, String]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) =>
+    // Line-oriented k<TAB>v with URL-encoding — no external JSON dependency needed.
+    // The first line, "#crc32<TAB><hex>", is the CRC-32 of the lines after it: a
+    // URL-encoded key never starts with '#', and files written before the line
+    // existed decode unverified.
+    private val CrcKey = "#crc32"
+    private def crc(body: Array[Byte]): String = {
+      val c = new CRC32
+      c.update(body)
+      java.lang.Long.toHexString(c.getValue)
+    }
+    def encode(m: Map[String, String]): Array[Byte] = {
+      val body = m.toSeq.sortBy(_._1).map { case (k, v) =>
         java.net.URLEncoder.encode(k, "UTF-8") + "\t" + java.net.URLEncoder.encode(v, "UTF-8")
-      }.mkString("\n")
-    def decode(s: String): Map[String, String] =
-      s.split("\n").filter(_.nonEmpty).map { line =>
+      }.mkString("\n").getBytes(StandardCharsets.UTF_8)
+      s"$CrcKey\t${crc(body)}\n".getBytes(StandardCharsets.UTF_8) ++ body
+    }
+    def decode(bytes: Array[Byte], path: Path): Map[String, String] = {
+      val body =
+        if (bytes.isEmpty || bytes(0) != '#') bytes
+        else {
+          val nl = bytes.indexOf('\n'.toByte) match { case -1 => bytes.length; case i => i }
+          val rest = bytes.drop(nl + 1)
+          if (new String(bytes, 0, nl, StandardCharsets.UTF_8) != s"$CrcKey\t${crc(rest)}")
+            throw new ChecksumException(s"state file $path fails its CRC-32 check", 0)
+          rest
+        }
+      new String(body, StandardCharsets.UTF_8).split("\n").filter(_.nonEmpty).map { line =>
         val Array(k, v) = line.split("\t", 2)
         java.net.URLDecoder.decode(k, "UTF-8") -> java.net.URLDecoder.decode(v, "UTF-8")
       }.toMap
+    }
   }
 }
 

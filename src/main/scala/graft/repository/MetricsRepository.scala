@@ -41,26 +41,38 @@ trait MetricsRepository {
           q.forAnalyzers.exists(a => k == a || k.startsWith(a + "."))).toMap)
       }
       .filter(_.metrics.nonEmpty)
-    val sorted = filtered.sortBy(_.key.timestamp)
+    val sorted = filtered.sortBy(r =>
+      (r.key.timestamp, ParquetMetricsRepository.encodeTags(r.key.tags)))
     val ordered = if (q.newestFirst) sorted.reverse else sorted
     val page = ordered.drop(q.offset)
     q.limit.map(page.take).getOrElse(page)
   }
 
-  /** History of one metric, oldest first — the anomaly-detection input. A `limit`
-    * keeps the NEWEST N points (then re-sorts oldest-first): limiting oldest-first
-    * would freeze the series at the first N runs ever recorded and newer points —
-    * the ones anomaly detection exists to judge — would never be returned.
+  /** History of one metric, oldest first — the anomaly-detection input. Points are
+    * ordered by (timestamp, encoded tags): runs recorded at the same timestamp under
+    * different tag sets come in the order of `ParquetMetricsRepository.encodeTags`, on
+    * every backend, so a `limit`/`offset` cut through such a tie keeps the same points
+    * everywhere. A `limit` keeps the NEWEST N points (then re-sorts oldest-first):
+    * limiting oldest-first would freeze the series at the first N runs ever recorded
+    * and newer points — the ones anomaly detection exists to judge — would never be
+    * returned.
     *
     * Pagination applies AFTER the exact-key extraction, not inside query(): query's
     * forAnalyzers filter also matches dotted sub-metrics (`metricKey.anything`), so
     * limiting records first could page in N records none of which carry the exact
-    * key — an empty "history" while real points exist.
+    * key — an empty "history" while real points exist. `forAnalyzers` and
+    * `newestFirst` of `q` are ignored. ParquetMetricsRepository overrides this with a
+    * read that pushes `metric = metricKey` into the file scan.
     */
   def history(metricKey: String, q: MetricsQuery = MetricsQuery(newestFirst = false)): Seq[(Long, Double)] = {
     val records = query(q.copy(forAnalyzers = Seq(metricKey), newestFirst = false,
       limit = None, offset = 0))
-    val points = records.flatMap(r => r.metrics.get(metricKey).map(r.key.timestamp -> _))
+    newestPage(records.flatMap(r => r.metrics.get(metricKey).map(r.key.timestamp -> _)), q)
+  }
+
+  /** `q`'s offset and limit counted from the newest of the oldest-first `points`. */
+  protected final def newestPage(points: Seq[(Long, Double)],
+      q: MetricsQuery): Seq[(Long, Double)] = {
     val newestFirst = points.reverse.drop(q.offset)
     q.limit.map(newestFirst.take).getOrElse(newestFirst).reverse
   }
@@ -78,11 +90,14 @@ trait MetricsRepository {
   /** Exact-key point lookup: the value recorded for `metricKey` at `timestamp`, if
     * any. Complements [[pointsFor]]'s newest-N window — a replay/collision probe for
     * a timestamp OLDER than the window needs this unbounded-exact check, not a wider
-    * scan. Base implementation filters [[history]]; ParquetMetricsRepository pushes
-    * both predicates into the file scan.
+    * scan. Points recorded at that timestamp under several tag sets resolve to the
+    * max value (`java.lang.Double.compare` order, NaN highest) on every backend.
+    * Base implementation filters [[history]]; ParquetMetricsRepository pushes both
+    * predicates into the file scan.
     */
   def pointAt(metricKey: String, timestamp: Long): Option[Double] =
-    history(metricKey).reverseIterator.find(_._1 == timestamp).map(_._2)
+    history(metricKey).collect { case (`timestamp`, v) => v }
+      .reduceOption(ParquetMetricsRepository.maxValue)
 
   /** The metric log as a DataFrame (timestamp, tags, metric, value) — arbitrary Spark
     * SQL over metric history for ANY repository implementation (the reference's
@@ -115,17 +130,42 @@ final class InMemoryMetricsRepository extends MetricsRepository {
 
 /** Parquet-backed repository: one row per (run, metric) — append-only, queryable with
   * plain DataFrame filters at any scale (replaces the reference's DataFusion-over-JSON
-  * executor, repository/datafusion_executor.rs:53-275).
+  * executor, repository/datafusion_executor.rs:53-275). Each `save` writes its rows
+  * from the driver as ONE parquet file (`part-<uuid>.parquet`, the four columns
+  * `timestamp, tags, metric, value`); no Spark job runs. Every read declares
+  * that schema, so none runs a schema-inference job, and logs written by Spark's own
+  * parquet writer (the same four columns) read the same way.
   */
 final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.SparkSession)
     extends MetricsRepository {
+  import ParquetMetricsRepository._
+  import org.apache.hadoop.fs.Path
+  import org.apache.spark.sql.functions.{col, max}
   import spark.implicits._
 
-  def save(key: ResultKey, metrics: Map[String, Double]): Unit = {
-    val tagStr = ParquetMetricsRepository.encodeTags(key.tags)
-    metrics.toSeq.map { case (m, v) => (key.timestamp, tagStr, m, v) }
-      .toDF("timestamp", "tags", "metric", "value")
-      .write.mode("append").parquet(path)
+  /** Written under a hidden temporary name, which Spark's file listing skips, then
+    * renamed into place: a concurrent read sees the whole file or none of it.
+    */
+  def save(key: ResultKey, metrics: Map[String, Double]): Unit = if (metrics.nonEmpty) {
+    val dir = new Path(path)
+    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = new Path(dir, s".$name.tmp")
+    val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(out)
+      .withConf(conf).withType(ParquetSchema)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED)
+      .build()
+    try {
+      val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(ParquetSchema)
+      val tagStr = encodeTags(key.tags)
+      metrics.foreach { case (m, v) =>
+        w.write(rows.newGroup().append("timestamp", key.timestamp).append("tags", tagStr)
+          .append("metric", m).append("value", v))
+      }
+    } finally w.close()
+    if (!dir.getFileSystem(conf).rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"could not rename $tmp into the metrics log")
   }
 
   /** The metric log as a DataFrame (timestamp, tags, metric, value) — arbitrary Spark
@@ -139,38 +179,49 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
     readLog(s) // honor the CALLER's session (temp views etc. land there)
 
   private def readLog(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) s.read.parquet(path)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("timestamp", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("tags", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("metric", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType))))
+    val p = new Path(path)
+    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
+      s.read.schema(LogSchema).parquet(path)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], LogSchema)
+  }
+
+  /** One metric's history in ONE Spark job: `metric = key` and the before/after
+    * bounds reach the file scan, the matching rows come to the driver, and duplicate
+    * rows of a (timestamp, tags) run merge to the max value exactly like loadAll.
+    */
+  override def history(metricKey: String, q: MetricsQuery): Seq[(Long, Double)] = {
+    val pushed = Seq(Some(col("metric") === metricKey), q.before.map(col("timestamp") < _),
+      q.after.map(col("timestamp") > _)).flatten.reduce(_ && _)
+    val runs = readLog(spark).filter(pushed).select("timestamp", "tags", "value")
+      .as[(Long, String, Double)].collect()
+      .groupMapReduce(r => (r._1, r._2))(_._3)(maxValue)
+    newestPage(runs.toSeq.sortBy(_._1).collect {
+      case ((ts, tags), v) if q.matches(MetricRecord(ResultKey(ts, decodeTags(tags)), Map.empty)) =>
+        ts -> v
+    }, q)
   }
 
   /** Predicate-pushed bounded read: `metric = key` prunes row groups at the parquet
     * scan, duplicate rows merge to the max value exactly like loadAll's record merge,
-    * and the newest-N cut runs as a distributed TopK (TakeOrdered) — the driver
-    * collects at most N rows however long the stream has been appending.
+    * and the newest-N cut runs as a distributed TopK (TakeOrdered) in [[history]]'s
+    * (timestamp, tags) order — the driver collects at most N rows however long the
+    * stream has been appending. Unbounded, it is [[history]].
     */
-  override def pointsFor(metricKey: String, newestN: Option[Int]): Seq[(Long, Double)] = {
-    import org.apache.spark.sql.functions.{col, max}
-    val merged = readLog(spark).filter(col("metric") === metricKey)
-      .groupBy(col("timestamp"), col("tags")).agg(max(col("value")).as("value"))
-      .select(col("timestamp"), col("value"))
-    val limited = newestN match {
-      case Some(n) => merged.orderBy(col("timestamp").desc).limit(n)
-      case None    => merged
+  override def pointsFor(metricKey: String, newestN: Option[Int]): Seq[(Long, Double)] =
+    newestN match {
+      case None => history(metricKey)
+      case Some(n) =>
+        readLog(spark).filter(col("metric") === metricKey)
+          .groupBy(col("timestamp"), col("tags")).agg(max(col("value")).as("value"))
+          .orderBy(col("timestamp").desc, col("tags").desc).limit(n)
+          .as[(Long, String, Double)].collect().toSeq
+          .sortBy(r => (r._1, r._2)).map(r => r._1 -> r._3)
     }
-    limited.as[(Long, Double)].collect().toSeq.sortBy(_._1)
-  }
 
   /** Exact (metric, timestamp) probe — both predicates reach the file scan; ties
     * across tag sets resolve to the max value, matching loadAll's merge direction.
     */
   override def pointAt(metricKey: String, timestamp: Long): Option[Double] = {
-    import org.apache.spark.sql.functions.{col, max}
     val row = readLog(spark)
       .filter(col("metric") === metricKey && col("timestamp") === timestamp)
       .agg(max(col("value"))).head()
@@ -181,16 +232,35 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
     readLog(spark)
       .as[(Long, String, String, Double)]
       .collect().toSeq
-      .groupBy(r => (r._1, r._2))
+      .groupBy(r => (r._1, r._2)).toSeq
       .map { case ((ts, tags), rows) =>
-        MetricRecord(ResultKey(ts, ParquetMetricsRepository.decodeTags(tags)),
-          // Sorted before toMap: groupBy preserves collect() order, which is partition-
-          // nondeterministic — a duplicated metric name must at least resolve the same
-          // way on every read.
-          rows.sortBy(r => (r._3, r._4)).map(r => r._3 -> r._4).toMap)
-      }.toSeq.sortBy(_.key.timestamp)
+        // Sorted before toMap: groupBy preserves collect() order, which is partition-
+        // nondeterministic — a duplicated metric name resolves to its max value.
+        (tags, MetricRecord(ResultKey(ts, decodeTags(tags)),
+          rows.sortBy(r => (r._3, r._4)).map(r => r._3 -> r._4).toMap))
+      }.sortBy(r => (r._2.key.timestamp, r._1)).map(_._2)
 }
 object ParquetMetricsRepository {
+  import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+  /** The metric log's four columns; [[ParquetSchema]] is their layout in a file. */
+  private val LogSchema: StructType = StructType(Seq(StructField("timestamp", LongType),
+    StructField("tags", StringType), StructField("metric", StringType),
+    StructField("value", DoubleType)))
+  private val ParquetSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  required int64 timestamp;
+      |  optional binary tags (STRING);
+      |  optional binary metric (STRING);
+      |  required double value;
+      |}""".stripMargin)
+
+  /** The max under `java.lang.Double.compare` (NaN highest), the order loadAll's
+    * per-run merge and Spark's `max` resolve duplicate rows by.
+    */
+  private[repository] def maxValue(a: Double, b: Double): Double =
+    if (java.lang.Double.compare(a, b) >= 0) a else b
+
   def encodeTags(tags: Map[String, String]): String =
     tags.toSeq.sorted.map { case (k, v) =>
       java.net.URLEncoder.encode(k, "UTF-8") + "=" + java.net.URLEncoder.encode(v, "UTF-8")

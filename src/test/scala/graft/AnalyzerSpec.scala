@@ -3,7 +3,6 @@ package graft
 import graft.analyzers._
 import graft.core.MetricValue
 import graft.repository._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Analyzer states: merge(partition states) must equal state(full data) — the
@@ -176,25 +175,6 @@ class AnalyzerSpec extends SparkSpec {
     assert(d(mixed.metrics("size.*")) == 1000.0)
     assert(math.abs(d(mixed.metrics("completeness.y")) - 0.75) < 1e-12)
     assert(math.abs(d(mixed.metrics("mean.x")) - 250.25) < 1e-9)
-  }
-
-  /** Spark jobs started by `f`, counted under a job group of their own. */
-  private def jobsOf(f: => Unit): Int = {
-    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "job count")
-    try f finally {
-      spark.sparkContext.clearJobGroup()
-      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 10000L)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.get()
   }
 
   test("incremental runner: per-partition ingest accumulates correctly") {

@@ -618,9 +618,14 @@ class MultimodalSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit(37)))
       .count().collect().map(r => { val n = r.getLong(1); n * (n - 1) / 2 }).sum
     assert(n1 == expected, s"arm pairs $n1 != same-seed arithmetic $expected")
-    // the incremental arm shares the fixture and must match ITS oracle arithmetic
-    val nInc = graft.Queries.operatorArms("incremental_video_dedup_documents")(spark, d)
-      .head().getLong(0)
+    // incremental pairing over the same fixture (even doc_ids indexed, odd doc_ids
+    // the new batch) must match ITS oracle arithmetic
+    val (docs, nDocs) = graft.Queries.videoClipFixture(spark, d)
+    val index = Multimodal.videoFrameHashIndex(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "clip")
+    val nInc = Multimodal.incrementalVideoPairs(docs.filter(col("doc_id") % 2 =!= 0), index,
+      "doc_id", "clip", maxHamming = 3, minMatchingFrames = 2,
+      maxBucketSize = graft.Queries.mediaBucketGuard(nDocs)).count()
     val expInc = spark.read.parquet(s"$d/documents.parquet")
       .filter(col("doc_id").isNotNull)
       .select(org.apache.spark.sql.functions.pmod(col("doc_id"),
@@ -634,7 +639,7 @@ class MultimodalSpec extends SparkSpec {
         val n = r.getLong(1); val o = r.getLong(2)
         n * (n - 1) / 2 - o * (o - 1) / 2
       }.sum
-    assert(nInc == expInc, s"incremental arm pairs $nInc != arithmetic $expInc")
+    assert(nInc == expInc, s"incremental pairs $nInc != arithmetic $expInc")
   }
 
   test("clip rollup differential: two-level aggregation matches a brute-force " +

@@ -19,6 +19,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSpec.cleanup.add(d)
     d.getAbsolutePath
   }
+
+  /** Spark jobs started by `f`, counted under a job group of their own. */
+  def jobsOf(f: => Unit): Int = {
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "job count")
+    try f finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark, 10000L)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get()
+  }
 }
 
 object SparkSpec {
