@@ -93,6 +93,57 @@ object Dedup {
     }
   }
 
+  // ---------- blocking ----------
+
+  /** The blocking step of every approximate near-dup family (MinHash, SimHash and the
+    * media hashes, hyperplane LSH, SemDeDup cells): one pair per two rows of `rows`
+    * sharing a bucket `key`, with `id_a < id_b`, and every non-key column `c` of `rows`
+    * (at least `id`) emitted as `c_a`/`c_b`. Buckets holding more than `maxBucketSize`
+    * rows are dropped whole — the guard against a boilerplate or degenerate pile
+    * turning the self-join quadratic. When `rows` has a boolean `_new` column
+    * ([[withStandingIndex]]), only pairs with a new side survive and the flag is not
+    * emitted. No distinct: a pair sharing several buckets comes out once per bucket,
+    * and the caller decides whether it needs one.
+    *
+    * Shape: ONE explicit shuffle on the key, consumed three times (the guard and both
+    * join sides). The guard is a windowed count over that same exchange: a separate
+    * aggregation branch gets column-pruned into a canonically different subplan (no id
+    * column), so neither static ReuseExchange nor AQE stage reuse could serve it, and
+    * it would re-run the upstream kernel (signatures, sketches, cell assignment) over
+    * the whole corpus. Above the exchange both join sides stay canonically identical,
+    * so ReuseExchange serves every consumer from the same shuffle files: the kernel
+    * runs once per row, the window and the join need no further exchange (the
+    * partitioning already matches their key), and — unlike persist() — nothing is
+    * pinned in executor storage (shuffle files are job-scoped). Only the skinny rows
+    * the caller passes cross the shuffle and the window's per-partition sort, never
+    * texts or vectors. Reuse needs an uncached input: Spark cannot canonicalize the two
+    * InMemoryRelation copies a cached input becomes across the self-join, so a cached
+    * corpus recomputes the kernel per side (correct, just slower).
+    */
+  private[operators] def blockedPairs(rows: DataFrame, key: Seq[String],
+      maxBucketSize: Int): DataFrame = {
+    require(maxBucketSize >= 2, "maxBucketSize (maxCellSize for SemDeDup) must be >= 2 " +
+      s"— a smaller cap drops every bucket that could hold a pair, got $maxBucketSize")
+    val k = key.map(col)
+    val bounded = rows.repartition(k: _*)
+      .withColumn("_n", count(lit(1)).over(Window.partitionBy(k: _*)))
+      .filter(col("_n") <= maxBucketSize)
+    val carried = rows.columns.filterNot(key.contains)
+    def side(s: String) = bounded.select(k ++ carried.map(c => col(c).as(s"${c}_$s")): _*)
+    val pairs = side("a").join(side("b"), key).filter(col("id_a") < col("id_b"))
+    (if (carried.contains("_new")) pairs.filter(col("_new_a") || col("_new_b")) else pairs)
+      .select(carried.filter(_ != "_new").flatMap(c => Seq(col(s"${c}_a"), col(s"${c}_b"))): _*)
+  }
+
+  /** The rows of an incremental batch over a stored index: `fresh` tagged
+    * `_new = true` over the index's rows (projected to `fresh`'s columns) tagged
+    * `false` — the flag [[blockedPairs]] reads to gate out old×old pairs, which
+    * previous runs already emitted.
+    */
+  private[operators] def withStandingIndex(fresh: DataFrame, index: DataFrame): DataFrame =
+    fresh.withColumn("_new", lit(true))
+      .unionByName(index.select(fresh.columns.map(col): _*).withColumn("_new", lit(false)))
+
   /** FNV-1a over a char range + fmix64 avalanche — the 64-bit shingle hash used by the
     * MinHash UDF. Allocation-free (no substring).
     */
@@ -231,22 +282,9 @@ object Dedup {
       maxBucketSize: Int = 1000): DataFrame = {
     require(Seq("id", "band", "bucket").forall(index.columns.contains),
       s"index must have (id, band, bucket) columns, got ${index.columns.mkString(", ")}")
-    val newBuckets = minhashIndex(newDocs, idCol, textCol, shingleSize, numHashes, bands)
-      .withColumn("_new", lit(true))
-    val all = newBuckets
-      .unionByName(index.select(col("id"), col("band"), col("bucket"))
-        .withColumn("_new", lit(false)))
-      .repartition(col("band"), col("bucket"))
-    val bounded = all
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("_n") <= maxBucketSize)
-    val a = bounded.select(col("band"), col("bucket"), col("id").as("id_a"),
-      col("_new").as("_new_a"))
-    val b = bounded.select(col("band"), col("bucket"), col("id").as("id_b"),
-      col("_new").as("_new_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b") && (col("_new_a") || col("_new_b")))
-      .select("id_a", "id_b").distinct()
+    val all = withStandingIndex(
+      minhashIndex(newDocs, idCol, textCol, shingleSize, numHashes, bands), index)
+    blockedPairs(all, Seq("band", "bucket"), maxBucketSize).distinct()
   }
 
   /** Candidate near-duplicate pairs (idA < idB) from MinHash-LSH. One shuffle on
@@ -260,38 +298,15 @@ object Dedup {
     * similarity (j ≤ 0.3) collide with probability < 1e-3 — wide bands (e.g. 32×4) let
     * background pairs flood the candidate set on boilerplate-heavy corpora.
     *
-    * Note: pass the corpus UNCACHED. The signature kernel runs once only because both
-    * self-join sides reuse one exchange, and Spark cannot canonicalize the two
-    * InMemoryRelation copies a cached input becomes across the self-join — a cached
-    * corpus recomputes the kernel per side (correct, just slower).
+    * Note: pass the corpus UNCACHED — a cached corpus recomputes the signature kernel
+    * per self-join side (correct, just slower; see [[blockedPairs]]).
     */
   def minhashCandidatePairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int = 5, numHashes: Int = 128, bands: Int = 16,
-      maxBucketSize: Int = 1000): DataFrame = {
-    // Consumed three times (bucket-size guard + both sides of the candidate join).
-    // One explicit shuffle on (band, bucket): ReuseExchange serves every consumer
-    // from the same shuffle files, so the signature kernel runs once per row, the
-    // downstream agg and self-join need no further exchange (partitioning already
-    // matches their keys), and — unlike persist() — nothing is pinned in executor
-    // storage for the life of the session (shuffle files are job-scoped).
-    val buckets = minhashIndex(df, idCol, textCol, shingleSize, numHashes, bands)
-      .repartition(col("band"), col("bucket"))
-    // Oversized-bucket guard as a windowed count over the SAME shuffle output. A
-    // separate aggregation branch gets column-pruned into a canonically different
-    // subplan (no id column), so neither static ReuseExchange nor AQE stage reuse can
-    // serve it — it would re-run the signature kernel over the whole corpus. The
-    // window's per-partition sort is over ~24-byte rows, far cheaper than a second
-    // kernel pass; both join sides below stay canonically identical, so the exchange
-    // materializes once and is reused.
-    val bounded = buckets
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("_n") <= maxBucketSize)
-    val a = bounded.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val b = bounded.select(col("band"), col("bucket"), col("id").as("id_b"))
-    a.join(b, Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-  }
+      maxBucketSize: Int = 1000): DataFrame =
+    blockedPairs(minhashIndex(df, idCol, textCol, shingleSize, numHashes, bands),
+      Seq("band", "bucket"), maxBucketSize).distinct()
 
   /** Sorted distinct 64-bit hashes of the text's char-n-gram shingle set — the
     * document's fingerprint set for Jaccard verification. One allocation-lean UDF pass
@@ -1252,16 +1267,16 @@ object Dedup {
   /** Shared back half of every 64-bit-sketch near-dup operator (SimHash text,
     * perceptual image hashes): band the long into 4×16 bits, bucket-join on exact
     * band matches (pigeonhole: any pair within Hamming ≤ 3 shares at least one
-    * band), verify with a codegen'd `bit_count(xor)`. Input: (`id`, `_h64`).
+    * band), verify with a codegen'd `bit_count(xor)`. Input: (`id`, `_h64`), plus
+    * `_new` for an incremental batch ([[withStandingIndex]]). ONE implementation for
+    * the full and incremental paths, so the recall contract can't drift between them.
     *
     * 100 TB shape: only (band, bits, id, h) rows cross the shuffle; the oversized-
-    * band guard (windowed count over the same exchange — same rationale as
-    * minhashCandidatePairs) drops degenerate buckets a boilerplate/monochrome pile
-    * would otherwise turn quadratic.
+    * band guard ([[blockedPairs]]) drops degenerate buckets a boilerplate/monochrome
+    * pile would otherwise turn quadratic.
     */
   private[operators] def bandedHammingPairs(hashed: DataFrame, maxHamming: Int,
-      maxBucketSize: Int, newFlagCol: Option[String] = None,
-      dedup: Boolean = true): DataFrame = {
+      maxBucketSize: Int, dedup: Boolean = true): DataFrame = {
     require(maxHamming >= 0, "maxHamming must be non-negative")
     // Warn HERE, not per caller: every 64-bit-sketch path (SimHash text, image
     // aHash, audio hash, their incremental variants, future sketches) shares the
@@ -1270,29 +1285,15 @@ object Dedup {
       log.warn(s"bandedHammingPairs: maxHamming=$maxHamming exceeds the 4x16-bit " +
         "banding guarantee (full recall only for Hamming <= 3) — pairs with a " +
         "differing bit in every band are never candidates, so recall is partial")
-    // Incremental mode: `newFlagCol` names a boolean marking fresh-batch rows; only
-    // pairs touching at least one fresh row are emitted (never old x old — previous
-    // runs already emitted those). Same banding, guard, and verify either way: ONE
-    // implementation, so the recall contract can't drift between the full and
-    // incremental paths.
-    val flag = newFlagCol.toSeq.map(col)
-    val banded = hashed.select(Seq(col("id"), col("_h64")) ++ flag :+
+    val cols = hashed.columns.map(col)
+    val banded = hashed.select(cols :+
       explode(array((0 until 4).map { b =>
         struct(lit(b).as("band"), shiftrightunsigned(col("_h64"), b * 16).bitwiseAND(lit(0xffffL)).as("bits"))
       }: _*)).as("bb"): _*)
-      .select(Seq(col("id"), col("_h64")) ++ flag ++
-        Seq(col("bb.band").as("band"), col("bb.bits").as("bits")): _*)
-      .repartition(col("band"), col("bits"))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("band"), col("bits"))))
-      .filter(col("_n") <= maxBucketSize).drop("_n")
-    def side(sfx: String) = banded.select(Seq(col("band"), col("bits"),
-      col("id").as(s"id_$sfx"), col("_h64").as(s"h_$sfx")) ++
-      newFlagCol.map(c => col(c).as(s"_flag_$sfx")): _*)
-    val joined = side("a").join(side("b"), Seq("band", "bits"))
-      .filter(col("id_a") < col("id_b"))
-    val cut = newFlagCol.fold(joined)(_ => joined.filter(col("_flag_a") || col("_flag_b")))
+      .select(cols ++ Seq(col("bb.band").as("band"), col("bb.bits").as("bits")): _*)
+    val cut = blockedPairs(banded, Seq("band", "bits"), maxBucketSize)
       .select(col("id_a"), col("id_b"),
-        bit_count(col("h_a").bitwiseXOR(col("h_b"))).as("hamming"))
+        bit_count(col("_h64_a").bitwiseXOR(col("_h64_b"))).as("hamming"))
       // Hamming cut BEFORE the dedup exchange (guide §2.3 — shuffle fewer bytes):
       // on a real corpus most banding collisions fail the cut, and rows dropped
       // here never enter the distinct's shuffle of the pipeline's largest
@@ -1393,10 +1394,10 @@ object Dedup {
     *
     * 100 TB shape, mirroring [[minhashCandidatePairs]]+[[exactJaccard]]: only
     * (table, bucket, id) rows — not the float vectors — cross the bucket shuffle and
-    * self-join; an oversized-bucket guard (windowed count over the same exchange)
-    * drops degenerate buckets (all-zero / near-identical vector piles, or planes ≪
-    * log₂ n) that would otherwise make the self-join quadratic; vectors are joined
-    * back per side only for the surviving distinct id pairs, then cosine-verified.
+    * self-join; the oversized-bucket guard ([[blockedPairs]]) drops degenerate
+    * buckets (all-zero / near-identical vector piles, or planes ≪ log₂ n) that would
+    * otherwise make the self-join quadratic; vectors are joined back per side only
+    * for the surviving distinct id pairs, then cosine-verified.
     */
   def nearDupPairsEmbedding(df: DataFrame, idCol: String, vecCol: String, dim: Int,
       threshold: Double, planes: Int = 8, tables: Int = 1,
@@ -1404,33 +1405,29 @@ object Dedup {
     require(planes >= 1 && planes <= 63, s"planes must be in [1, 63], got $planes")
     require(tables >= 1, s"tables must be positive, got $tables")
     val docs = fanOut(df).select(col(idCol).as("id"), col(vecCol).as("v"))
-    // Vector lookup side for the verify joins: one explicit shuffle on the id so
-    // ReuseExchange feeds both the id_a and id_b joins from a single materialization
-    // (same rationale as exactJaccard's shingle side).
-    val vecs = docs.select(col("id").as("_vid"), col("v")).repartition(col("_vid"))
     // Null vectors bucket to null and posexplode drops them — a null embedding can
     // never cosine-verify anyway, and without the drop every null would need a
     // null-safe join to even pair up.
-    val bucketed = docs
-      .select(col("id"),
-        posexplode(hyperplaneBuckets(col("v"), dim, planes, tables)).as(Seq("table", "bucket")))
-      // Guard shape identical to minhashCandidatePairs: one explicit shuffle on the
-      // bucket key reused by the windowed count and both join sides; the window sees
-      // ~20-byte (table, bucket, id) rows, never the vectors.
-      .repartition(col("table"), col("bucket"))
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("table"), col("bucket"))))
-      .filter(col("_n") <= maxBucketSize).drop("_n")
-    val a = bucketed.select(col("table"), col("bucket"), col("id").as("id_a"))
-    val b = bucketed.select(col("table"), col("bucket"), col("id").as("id_b"))
+    val bucketed = docs.select(col("id"),
+      posexplode(hyperplaneBuckets(col("v"), dim, planes, tables)).as(Seq("table", "bucket")))
     // Distinct BEFORE the vector join: a pair sharing buckets in several tables must
     // fetch vectors and run the cosine kernel once, not `tables` times.
-    val idPairs = a.join(b, Seq("table", "bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    idPairs
-      .join(vecs.withColumnRenamed("_vid", "id_a").withColumnRenamed("v", "v_a"), "id_a")
-      .join(vecs.withColumnRenamed("_vid", "id_b").withColumnRenamed("v", "v_b"), "id_b")
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cosine"))
+    val idPairs = blockedPairs(bucketed, Seq("table", "bucket"), maxBucketSize).distinct()
+    withCosine(idPairs, docs.select(col("id").as("_vid"), col("v")))
       .filter(col("cosine") >= threshold)
+  }
+
+  /** `(id_a, id_b)` pairs → `(id_a, id_b, cosine)`, each side's vector joined back
+    * from `vecs`' `(_vid, v)` rows. One explicit shuffle on the id lets
+    * ReuseExchange feed both the id_a and id_b joins from a single materialization
+    * (the shape of exactJaccard's shingle side).
+    */
+  private[operators] def withCosine(pairs: DataFrame, vecs: DataFrame): DataFrame = {
+    val v = vecs.repartition(col("_vid"))
+    pairs
+      .join(v.withColumnRenamed("_vid", "id_a").withColumnRenamed("v", "v_a"), "id_a")
+      .join(v.withColumnRenamed("_vid", "id_b").withColumnRenamed("v", "v_b"), "id_b")
+      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cosine"))
   }
 
   /** Persistable hyperplane-LSH bucket index of an embedding corpus: one
@@ -1466,22 +1463,9 @@ object Dedup {
       seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
     require(Seq("id", "table", "bucket").forall(index.columns.contains),
       s"index must have (id, table, bucket) columns, got ${index.columns.mkString(", ")}")
-    val newBuckets = embeddingBucketIndex(newDocs, idCol, vecCol, dim, planes,
-      tables, seed).withColumn("_new", lit(true))
-    val all = newBuckets
-      .unionByName(index.select(col("id"), col("table"), col("bucket"))
-        .withColumn("_new", lit(false)))
-      .repartition(col("table"), col("bucket"))
-    val bounded = all
-      .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("table"), col("bucket"))))
-      .filter(col("_n") <= maxBucketSize)
-    val a = bounded.select(col("table"), col("bucket"), col("id").as("id_a"),
-      col("_new").as("_new_a"))
-    val b = bounded.select(col("table"), col("bucket"), col("id").as("id_b"),
-      col("_new").as("_new_b"))
-    a.join(b, Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b") && (col("_new_a") || col("_new_b")))
-      .select("id_a", "id_b").distinct()
+    val all = withStandingIndex(
+      embeddingBucketIndex(newDocs, idCol, vecCol, dim, planes, tables, seed), index)
+    blockedPairs(all, Seq("table", "bucket"), maxBucketSize).distinct()
   }
 
   /** Cosine verification of candidate id pairs: `allVecs` is semi-joined down to
@@ -1495,13 +1479,9 @@ object Dedup {
       vecCol: String, threshold: Double): DataFrame = {
     val wanted = pairs.select(col("id_a").as("_vid"))
       .union(pairs.select(col("id_b").as("_vid"))).distinct()
-    val vecs = fanOut(allVecs).select(col(idCol).as("_vid"), col(vecCol).as("_v"))
-      .join(wanted, Seq("_vid"), "left_semi").repartition(col("_vid"))
-    pairs
-      .join(vecs.withColumnRenamed("_vid", "id_a").withColumnRenamed("_v", "v_a"), "id_a")
-      .join(vecs.withColumnRenamed("_vid", "id_b").withColumnRenamed("_v", "v_b"), "id_b")
-      .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    val vecs = fanOut(allVecs).select(col(idCol).as("_vid"), col(vecCol).as("v"))
+      .join(wanted, Seq("_vid"), "left_semi")
+    withCosine(pairs, vecs).filter(col("cosine") >= threshold)
   }
 
   /** End-to-end incremental embedding near-dup pairs: guarded candidates against the

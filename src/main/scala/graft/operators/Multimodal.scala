@@ -1484,15 +1484,15 @@ object Multimodal {
     * `(id_a, id_b, matching_frames, min_hamming)` with id_a < id_b and
     * `matching_frames >= minMatchingFrames`. ONE implementation for the full and
     * incremental paths (the bandedHammingPairs pattern) — the match contract
-    * cannot drift between them.
+    * cannot drift between them. An incremental batch's rows carry the `_new` flag
+    * ([[Dedup.withStandingIndex]]), which passes through to the banded join.
     */
   private def clipPairsFromFrameRows(frameHashes: DataFrame, maxHamming: Int,
-      minMatchingFrames: Int, maxBucketSize: Int,
-      newFlagCol: Option[String] = None): DataFrame = {
+      minMatchingFrames: Int, maxBucketSize: Int): DataFrame = {
     require(minMatchingFrames >= 1, "minMatchingFrames must be >= 1")
     val frameRows = frameHashes
       .select(Seq(struct(col("id").as("cid"), col("frame_idx").as("fidx")).as("id"),
-        col("frame_hash").as("_h64")) ++ newFlagCol.map(col): _*)
+        col("frame_hash").as("_h64")) ++ frameHashes.columns.filter(_ == "_new").map(col): _*)
     // dedup = false + explicit two-level aggregation (round 15): the rollup only
     // needs DUPLICATE-insensitive facts per (clip pair, A-frame) — min hamming
     // and the count of distinct matched A-frames — so the source now states the
@@ -1510,7 +1510,7 @@ object Multimodal {
     // pinned in MultimodalSpec's clip rollup differential). Kept explicit so the
     // plan shape is pinned by construction, not by two optimizer rules firing.
     val framePairs = Dedup.bandedHammingPairs(frameRows, maxHamming, maxBucketSize,
-      newFlagCol = newFlagCol, dedup = false)
+      dedup = false)
     // cross-clip only (a clip's own repeated frames are not a duplicate relation).
     // bandedHammingPairs emits id_a < id_b on the (cid, fidx)-LEXICOGRAPHIC structs,
     // so once equal cids are filtered out, id_a.cid < id_b.cid already holds — the
@@ -1576,12 +1576,10 @@ object Multimodal {
       minMatchingFrames: Int = 2, maxBucketSize: Int = 10000): DataFrame = {
     require(Seq("id", "frame_idx", "frame_hash").forall(index.columns.contains),
       s"index must have (id, frame_idx, frame_hash) columns, got ${index.columns.mkString(", ")}")
-    val all = videoFrameHashes(newClips, idCol, binCol, decoder, everyNth, maxFrames)
-      .withColumn("_new", lit(true))
-      .unionByName(index.select(col("id"), col("frame_idx"), col("frame_hash"))
-        .filter(col("frame_hash").isNotNull).withColumn("_new", lit(false)))
-    clipPairsFromFrameRows(all, maxHamming, minMatchingFrames, maxBucketSize,
-      newFlagCol = Some("_new"))
+    val all = Dedup.withStandingIndex(
+      videoFrameHashes(newClips, idCol, binCol, decoder, everyNth, maxFrames),
+      index.filter(col("frame_hash").isNotNull))
+    clipPairsFromFrameRows(all, maxHamming, minMatchingFrames, maxBucketSize)
   }
 
   /** Video dedup: keep-lowest-id survivors of [[nearDupPairsVideo]] (the family's
@@ -1702,13 +1700,10 @@ object Multimodal {
       maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
     require(Seq("id", "image_hash").forall(index.columns.contains),
       s"index must have (id, image_hash) columns, got ${index.columns.mkString(", ")}")
-    val all = imageHashIndex(newImages, idCol, binCol).withColumn("_new", lit(true))
-      .unionByName(index.select(col("id"), col("image_hash"))
-        .filter(col("image_hash").isNotNull).withColumn("_new", lit(false)))
+    val all = Dedup.withStandingIndex(imageHashIndex(newImages, idCol, binCol),
+        index.filter(col("image_hash").isNotNull))
       .select(col("id"), col("image_hash").as("_h64"), col("_new"))
-    // ONE banded-Hamming implementation for full AND incremental paths
-    // (Dedup.bandedHammingPairs) — the flag column gates out old x old pairs.
-    Dedup.bandedHammingPairs(all, maxHamming, maxBucketSize, newFlagCol = Some("_new"))
+    Dedup.bandedHammingPairs(all, maxHamming, maxBucketSize)
   }
 
   /** Persistable audio-hash index: one `(id, audio_hash)` row per clip with a
@@ -1731,11 +1726,10 @@ object Multimodal {
       maxHamming: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
     require(Seq("id", "audio_hash").forall(index.columns.contains),
       s"index must have (id, audio_hash) columns, got ${index.columns.mkString(", ")}")
-    val all = audioHashIndex(newClips, idCol, binCol).withColumn("_new", lit(true))
-      .unionByName(index.select(col("id"), col("audio_hash"))
-        .filter(col("audio_hash").isNotNull).withColumn("_new", lit(false)))
+    val all = Dedup.withStandingIndex(audioHashIndex(newClips, idCol, binCol),
+        index.filter(col("audio_hash").isNotNull))
       .select(col("id"), col("audio_hash").as("_h64"), col("_new"))
-    Dedup.bandedHammingPairs(all, maxHamming, maxBucketSize, newFlagCol = Some("_new"))
+    Dedup.bandedHammingPairs(all, maxHamming, maxBucketSize)
   }
 
   /** Media-size/format stats for a binary column — a typical corpus health check.

@@ -377,10 +377,10 @@ object Similarity {
     * near-dups are invisible by design — that is SemDeDup's recall/cost trade, with
     * the cluster count k steering it (more cells = cheaper + lower recall).
     *
-    * Same scale shape as the hyperplane-LSH path (`Dedup.nearDupPairsEmbedding`):
-    * only (cell, id) rows cross the cell shuffle, a windowed count drops cells above
-    * `maxCellSize` (a degenerate clustering cannot go quadratic carrying vectors),
-    * and vectors join back per side only for surviving candidate id-pairs. NULL
+    * Same blocking step as the hyperplane-LSH path (`Dedup.blockedPairs`): only
+    * (cell, id) rows cross the cell shuffle, cells above `maxCellSize` (>= 2) are
+    * dropped (a degenerate clustering cannot go quadratic carrying vectors), and
+    * vectors join back per side only for surviving candidate id-pairs. NULL
     * vectors have no cell and pair with nothing.
     */
   /** `probeSupers > 0` routes cell assignment through [[ivfAssignHierarchical]] —
@@ -394,27 +394,15 @@ object Similarity {
       centroids: Seq[Seq[Float]], threshold: Double,
       maxCellSize: Int = 10000, probeSupers: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
-    require(maxCellSize >= 2, s"maxCellSize must be >= 2, got $maxCellSize")
     val docs = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val vecs = docs.select(col("id").as("_vid"), col("v")).repartition(col("_vid"))
     val celled = (if (probeSupers > 0)
         ivfAssignHierarchical(docs, "v", centroids, out = "_cell", probeSupers = probeSupers)
       else ivfAssign(docs, "v", centroids, out = "_cell"))
       .filter(col("_cell").isNotNull)
       .select(col("id"), col("_cell"))
-      .repartition(col("_cell"))
-      .withColumn("_n", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("_cell"))))
-      .filter(col("_n") <= maxCellSize).drop("_n")
-    val a = celled.select(col("_cell"), col("id").as("id_a"))
-    val b = celled.select(col("_cell"), col("id").as("id_b"))
-    val idPairs = a.join(b, Seq("_cell")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    idPairs
-      .join(vecs.withColumnRenamed("_vid", "id_a").withColumnRenamed("v", "v_a"), "id_a")
-      .join(vecs.withColumnRenamed("_vid", "id_b").withColumnRenamed("v", "v_b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorFunctions.cosine(col("v_a"), col("v_b")).as("cosine"))
+    // One cell per row, so two rows share at most one cell: no distinct needed.
+    val idPairs = Dedup.blockedPairs(celled, Seq("_cell"), maxCellSize)
+    Dedup.withCosine(idPairs, docs.select(col("id").as("_vid"), col("v")))
       // NaN guard: a zero-norm vector is assigned cell 0 by ivfAssign (bestCell<0
       // falls back to 0) and its cosine with every cell-mate is 0/0 = NaN — which
       // Spark orders ABOVE every double, so `>= threshold` alone would emit a

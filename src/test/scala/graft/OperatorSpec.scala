@@ -141,6 +141,36 @@ class OperatorSpec extends SparkSpec {
     } finally graft.core.FsUtil.deleteRecursively(new java.io.File(tmp))
   }
 
+  test("incremental embedding dedup == full recompute restricted to new-batch pairs") {
+    // The fixture's 500 random 64-dim vectors have 920 pairs at cosine >= 0.3 and none
+    // at 0.5, so 0.3 is the threshold with pairs to find; 4 planes x 2 tables catch a
+    // share of them, the same share on both paths.
+    val (dim, threshold, planes, tables) = (64, 0.3, 4, 2)
+    def pairsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val all = embs.filter(col("vec_id").isNotNull)
+    val oldVecs = all.filter(col("vec_id") % 3 =!= 0)
+    val newVecs = all.filter(col("vec_id") % 3 === 0)
+    val full = pairsOf(Dedup.nearDupPairsEmbedding(all, "vec_id", "embedding", dim,
+      threshold, planes, tables))
+    val expected = full.filter { case (a, b) => a % 3 == 0 || b % 3 == 0 }
+    assert(expected.nonEmpty && expected != full,
+      "fixture must contain new-batch pairs and old-by-old pairs")
+    def incremental(index: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      pairsOf(Dedup.incrementalEmbeddingPairs(newVecs, index, all, "vec_id", "embedding",
+        dim, threshold, planes, tables))
+    val index = Dedup.embeddingBucketIndex(oldVecs, "vec_id", "embedding", dim, planes, tables)
+    val inc = incremental(index)
+    assert(inc == expected, s"missed: ${expected -- inc}; extra: ${inc -- expected}")
+    // no old-by-old pair may leak: previous runs own those
+    assert(inc.forall { case (a, b) => a % 3 == 0 || b % 3 == 0 })
+    val tmp = tmpDir("graft_emb_idx")
+    index.write.mode("overwrite").parquet(tmp)
+    try assert(incremental(spark.read.parquet(tmp)) == expected,
+      "parquet-round-tripped index must behave identically")
+    finally graft.core.FsUtil.deleteRecursively(new java.io.File(tmp))
+  }
+
   test("native cosine expression matches driver-side computation and codegens") {
     import spark.implicits._
     val probe = Seq(1.0f, 2.0f, 3.0f, 4.0f)
@@ -417,6 +447,17 @@ class OperatorSpec extends SparkSpec {
     cands.collect()
     assert(cands.queryExecution.executedPlan.toString.contains("ReusedExchange"),
       "candidate self-join should serve both sides from one reused shuffle")
+    // The same one-shuffle property for the other callers of the shared blocking join.
+    val freshNew = freshDocs.filter(col("doc_id") % 3 === 0)
+    val freshIndex = Dedup.minhashIndex(freshDocs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text")
+    Seq("incrementalMinhashCandidates" ->
+        Dedup.incrementalMinhashCandidates(freshNew, freshIndex, "doc_id", "text"),
+      "nearDupPairsSimhash" -> Dedup.nearDupPairsSimhash(freshDocs, "doc_id", "text"))
+      .foreach { case (name, df) =>
+        df.collect()
+        assert(df.queryExecution.executedPlan.toString.contains("ReusedExchange"),
+          s"$name: the blocking self-join should serve both sides from one reused shuffle")
+      }
     val pairs = Dedup.nearDupPairsMinhash(freshDocs, "doc_id", "text", 0.9)
     pairs.collect()
     Dedup.nearDupClusters(docs, "doc_id", "text", 0.9).collect()
@@ -519,6 +560,10 @@ class OperatorSpec extends SparkSpec {
         "id", "v", "eid", "evec", dim, 0.95, tables = 2, maxBucketSize = 1)
     }
     assert(eBucket.getMessage.contains("maxBucketSize"), eBucket.getMessage)
+    // ...while a cap of 1 stays a legal setting here (the dedup family's blocking
+    // join rejects it): an eval set of one vector builds under it
+    Dedup.buildSemanticEvalIndex(degenerateEval.limit(1), "eid", "evec", dim,
+      tables = 2, maxBucketSize = 1)
     // an out-of-range threshold (85 for 85%) would make the firewall silently
     // inert — fail loud in the batch operator, not only the gate
     val eThr = intercept[IllegalArgumentException] {
@@ -1132,6 +1177,33 @@ class OperatorSpec extends SparkSpec {
     // and with the cap above the population, the boilerplate pairs all appear
     val unguarded = Dedup.minhashCandidatePairs(df, "doc_id", "text", maxBucketSize = 1000)
     assert(unguarded.count() == 200L * 199L / 2 + 1)
+    // SimHash (the banded-Hamming join the media families share): the pile sketches
+    // to one 64-bit hash, so all four of its band buckets hold the 200 ids.
+    val simGuarded = Dedup.nearDupPairsSimhash(df, "doc_id", "text", maxBucketSize = 50)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(simGuarded == Set((900L, 901L)),
+      s"simhash: only the under-cap bucket's pair should survive, got ${simGuarded.size} pairs")
+    assert(Dedup.nearDupPairsSimhash(df, "doc_id", "text", maxBucketSize = 1000).count() ==
+      200L * 199L / 2 + 1)
+    // Incremental MinHash with the pile split 100/100 across the index and the new
+    // batch: each side alone is under a cap of 150, the combined bucket is not, so
+    // the guard must count both sides.
+    val isNew = col("doc_id") % 2 === 0
+    val index = Dedup.minhashIndex(df.filter(!isNew), "doc_id", "text")
+    val incGuarded = Dedup.incrementalMinhashCandidates(df.filter(isNew), index,
+      "doc_id", "text", maxBucketSize = 150)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(incGuarded == Set((900L, 901L)),
+      s"incremental: the combined bucket must be dropped, got ${incGuarded.size} pairs")
+    // above the cap: every pile pair with a new side, i.e. C(200,2) minus the C(100,2)
+    // old-by-old pairs, plus the tail pair
+    assert(Dedup.incrementalMinhashCandidates(df.filter(isNew), index, "doc_id", "text",
+      maxBucketSize = 1000).count() == 200L * 199L / 2 - 100L * 99L / 2 + 1)
+    // A cap below 2 drops every bucket that could hold a pair: rejected, not silently empty.
+    assertThrows[IllegalArgumentException](
+      Dedup.minhashCandidatePairs(df, "doc_id", "text", maxBucketSize = 1))
+    assertThrows[IllegalArgumentException](
+      Dedup.nearDupPairsSimhash(df, "doc_id", "text", maxBucketSize = 1))
   }
 
   test("quality score ranges and ordering") {
