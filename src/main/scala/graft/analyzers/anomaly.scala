@@ -10,6 +10,10 @@ trait AnomalyDetectionStrategy {
   def name: String
   /** Given history (oldest first), return detected anomalies. */
   def detect(series: Seq[(Long, Double)]): Seq[Anomaly]
+
+  /** True iff [[detect]] flags a point at the timestamp of the series' last point. */
+  def flagsLatest(series: Seq[(Long, Double)]): Boolean =
+    series.lastOption.exists { case (ts, _) => detect(series).exists(_.timestamp == ts) }
 }
 
 /** Flags relative changes outside [maxDecrease, maxIncrease]
@@ -63,21 +67,35 @@ final case class ZScoreStrategy(threshold: Double = 3.0, minHistory: Int = 3)
     extends AnomalyDetectionStrategy {
   val name = "z_score"
   def detect(series: Seq[(Long, Double)]): Seq[Anomaly] = {
-    val values = series.map(_._2)
-    series.zipWithIndex.drop(minHistory).flatMap { case ((ts, v), i) =>
-      // Non-finite history points (NaN completeness of an empty batch is a legitimate,
-      // persisted value) must not participate: one NaN in the window would make
-      // mean/sd NaN for EVERY later point and silently disable detection forever.
-      val prior = values.take(i).filter(java.lang.Double.isFinite)
-      if (prior.size < minHistory) None
-      else {
-        val mean = prior.sum / prior.size
-        val variance = prior.map(x => (x - mean) * (x - mean)).sum / prior.size
-        val sd = math.sqrt(variance)
-        if (sd > 0 && math.abs(v - mean) / sd > threshold)
-          Some(Anomaly(ts, v, f"z-score ${math.abs(v - mean) / sd}%.2f vs mean $mean%.4f"))
-        else None
-      }
+    val s = series.toIndexedSeq
+    s.indices.flatMap(anomalyAt(s, _))
+  }
+
+  /** Scores only the points at the latest timestamp — one pass over the history, not
+    * [[detect]]'s one per point.
+    */
+  override def flagsLatest(series: Seq[(Long, Double)]): Boolean = {
+    val s = series.toIndexedSeq
+    s.lastOption.exists { case (ts, _) =>
+      s.indices.exists(i => s(i)._1 == ts && anomalyAt(s, i).nonEmpty)
+    }
+  }
+
+  /** Point `i` scored against the points before it. */
+  private def anomalyAt(series: IndexedSeq[(Long, Double)], i: Int): Option[Anomaly] = {
+    // Non-finite history points (NaN completeness of an empty batch is a legitimate,
+    // persisted value) must not participate: one NaN in the window would make
+    // mean/sd NaN for EVERY later point and silently disable detection forever.
+    val prior = series.view.take(i).map(_._2).filter(java.lang.Double.isFinite).toVector
+    val (ts, v) = series(i)
+    if (prior.size < minHistory) None
+    else {
+      val mean = prior.sum / prior.size
+      val variance = prior.map(x => (x - mean) * (x - mean)).sum / prior.size
+      val sd = math.sqrt(variance)
+      if (sd > 0 && math.abs(v - mean) / sd > threshold)
+        Some(Anomaly(ts, v, f"z-score ${math.abs(v - mean) / sd}%.2f vs mean $mean%.4f"))
+      else None
     }
   }
 }
@@ -104,14 +122,9 @@ final class AnomalyDetectionRunner(
     strategyFor(metricKey).map(_.detect(repository.history(metricKey))).getOrElse(Nil)
 
   /** True iff the most recent observation of the metric is anomalous. One history
-    * read: detecting over the SAME series the "latest" timestamp came from (a second
-    * read would be another full log scan AND could race a concurrent append,
-    * checking a stale latest against a newer series).
+    * read: judging the SAME series the "latest" timestamp came from (a second read
+    * could race a concurrent append, checking a stale latest against a newer series).
     */
-  def isLatestAnomalous(metricKey: String): Boolean = {
-    val h = repository.history(metricKey)
-    h.lastOption.exists { case (ts, _) =>
-      strategyFor(metricKey).exists(_.detect(h).exists(_.timestamp == ts))
-    }
-  }
+  def isLatestAnomalous(metricKey: String): Boolean =
+    strategyFor(metricKey).exists(_.flagsLatest(repository.history(metricKey)))
 }

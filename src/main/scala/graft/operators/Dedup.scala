@@ -1420,13 +1420,16 @@ object Dedup {
   /** `(id_a, id_b)` pairs → `(id_a, id_b, cosine)`, each side's vector joined back
     * from `vecs`' `(_vid, v)` rows. One explicit shuffle on the id lets
     * ReuseExchange feed both the id_a and id_b joins from a single materialization
-    * (the shape of exactJaccard's shingle side).
+    * (the shape of exactJaccard's shingle side). Both columns are aliased under that
+    * shuffle: the optimizer then drops a round-robin [[fanOut]] exchange below it,
+    * which a pass-through `v` column keeps (one exchange fewer in the AQE-final plan
+    * of [[nearDupPairsEmbedding]]).
     */
   private[operators] def withCosine(pairs: DataFrame, vecs: DataFrame): DataFrame = {
-    val v = vecs.repartition(col("_vid"))
+    val v = vecs.select(col("_vid").as("_id"), col("v").as("_vec")).repartition(col("_id"))
     pairs
-      .join(v.withColumnRenamed("_vid", "id_a").withColumnRenamed("v", "v_a"), "id_a")
-      .join(v.withColumnRenamed("_vid", "id_b").withColumnRenamed("v", "v_b"), "id_b")
+      .join(v.withColumnRenamed("_id", "id_a").withColumnRenamed("_vec", "v_a"), "id_a")
+      .join(v.withColumnRenamed("_id", "id_b").withColumnRenamed("_vec", "v_b"), "id_b")
       .select(col("id_a"), col("id_b"), cosine(col("v_a"), col("v_b")).as("cosine"))
   }
 

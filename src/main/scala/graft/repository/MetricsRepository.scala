@@ -61,8 +61,7 @@ trait MetricsRepository {
     * forAnalyzers filter also matches dotted sub-metrics (`metricKey.anything`), so
     * limiting records first could page in N records none of which carry the exact
     * key — an empty "history" while real points exist. `forAnalyzers` and
-    * `newestFirst` of `q` are ignored. ParquetMetricsRepository overrides this with a
-    * read that pushes `metric = metricKey` into the file scan.
+    * `newestFirst` of `q` are ignored.
     */
   def history(metricKey: String, q: MetricsQuery = MetricsQuery(newestFirst = false)): Seq[(Long, Double)] = {
     val records = query(q.copy(forAnalyzers = Seq(metricKey), newestFirst = false,
@@ -78,11 +77,8 @@ trait MetricsRepository {
   }
 
   /** Newest-N points of EXACTLY `metricKey` (no dotted sub-metrics), returned
-    * oldest-first — the bounded per-batch read the streaming anomaly sink does on
-    * every micro-batch. The base implementation delegates to [[history]], whose bound
-    * is DRIVER-SIDE only (the full log is still loaded); ParquetMetricsRepository
-    * overrides with a predicate-pushed distributed read so the driver only ever
-    * collects N rows regardless of log size.
+    * oldest-first — the per-batch read the streaming anomaly sink does on every
+    * micro-batch. The bound is on the answer, not on the read: [[history]] reads it all.
     */
   def pointsFor(metricKey: String, newestN: Option[Int]): Seq[(Long, Double)] =
     history(metricKey, MetricsQuery(limit = newestN, newestFirst = false))
@@ -92,8 +88,6 @@ trait MetricsRepository {
     * a timestamp OLDER than the window needs this unbounded-exact check, not a wider
     * scan. Points recorded at that timestamp under several tag sets resolve to the
     * max value (`java.lang.Double.compare` order, NaN highest) on every backend.
-    * Base implementation filters [[history]]; ParquetMetricsRepository pushes both
-    * predicates into the file scan.
     */
   def pointAt(metricKey: String, timestamp: Long): Option[Double] =
     history(metricKey).collect { case (`timestamp`, v) => v }
@@ -132,16 +126,28 @@ final class InMemoryMetricsRepository extends MetricsRepository {
   * plain DataFrame filters at any scale (replaces the reference's DataFusion-over-JSON
   * executor, repository/datafusion_executor.rs:53-275). Each `save` writes its rows
   * from the driver as ONE parquet file (`part-<uuid>.parquet`, the four columns
-  * `timestamp, tags, metric, value`); no Spark job runs. Every read declares
-  * that schema, so none runs a schema-inference job, and logs written by Spark's own
-  * parquet writer (the same four columns) read the same way.
+  * `timestamp, tags, metric, value`); no Spark job runs.
+  *
+  * Reads answer from the log files this instance has already read, keyed by name,
+  * length and modification time. Each read lists the directory once (skipping `_` and
+  * `.` names, as Spark's listing does) and reads only the files not seen yet — other
+  * writers', a prefix written by Spark's own parquet writer — in ONE Spark job with the
+  * log schema declared; files gone from the listing are forgotten. `save` registers
+  * its own file, so a sole writer's reads run no job. Log files never change once
+  * renamed into place, so the answers are those of a full scan. The trade-off: the
+  * instance holds every row of the log, what `loadAll` collects, while it lives.
   */
 final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.SparkSession)
     extends MetricsRepository {
   import ParquetMetricsRepository._
   import org.apache.hadoop.fs.Path
-  import org.apache.spark.sql.functions.{col, max}
+  import org.apache.spark.sql.functions.col
   import spark.implicits._
+
+  /** Log file name → its rows, guarded by itself: the streaming sink may read and save
+    * from another thread.
+    */
+  private val seen = scala.collection.mutable.HashMap.empty[String, LogFile]
 
   /** Written under a hidden temporary name, which Spark's file listing skips, then
     * renamed into place: a concurrent read sees the whole file or none of it.
@@ -156,23 +162,23 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
       .withConf(conf).withType(ParquetSchema)
       .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED)
       .build()
+    val tags = encodeTags(key.tags)
+    val rows = metrics.toSeq.map { case (m, v) => LogRow(key.timestamp, tags, m, v) }
     try {
-      val rows = new org.apache.parquet.example.data.simple.SimpleGroupFactory(ParquetSchema)
-      val tagStr = encodeTags(key.tags)
-      metrics.foreach { case (m, v) =>
-        w.write(rows.newGroup().append("timestamp", key.timestamp).append("tags", tagStr)
-          .append("metric", m).append("value", v))
-      }
+      val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(ParquetSchema)
+      rows.foreach(r => w.write(groups.newGroup().append("timestamp", r.timestamp)
+        .append("tags", r.tags).append("metric", r.metric).append("value", r.value)))
     } finally w.close()
-    if (!dir.getFileSystem(conf).rename(tmp, new Path(dir, name)))
+    val fs = dir.getFileSystem(conf)
+    val target = new Path(dir, name)
+    if (!fs.rename(tmp, target))
       throw new java.io.IOException(s"could not rename $tmp into the metrics log")
+    seen.synchronized(seen(name) = LogFile(fileKey(fs.getFileStatus(target)), rows))
   }
 
-  /** The metric log as a DataFrame (timestamp, tags, metric, value) — arbitrary Spark
-    * SQL over metric history (the reference's SQL-over-metrics executor,
-    * repository/datafusion_executor.rs, without a bespoke engine). Reads the files
-    * directly — no driver round-trip, any history size. A repository with no saves
-    * yet reads as an EMPTY frame with the log schema, matching loadAll()'s Nil.
+  /** The metric log as a DataFrame, read by Spark from the files — no driver
+    * round-trip, any history size. A repository with no saves yet reads as an EMPTY
+    * frame with the log schema, matching loadAll()'s Nil.
     */
   def toDataFrame: org.apache.spark.sql.DataFrame = readLog(spark)
   override def toDataFrame(s: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
@@ -185,63 +191,55 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
     else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], LogSchema)
   }
 
-  /** One metric's history in ONE Spark job: `metric = key` and the before/after
-    * bounds reach the file scan, the matching rows come to the driver, and duplicate
-    * rows of a (timestamp, tags) run merge to the max value exactly like loadAll.
+  /** Every row of the log as listed now: remembered rows for the files already seen,
+    * one Spark job for the rest. Past Spark's parallel-discovery threshold, explicit
+    * paths would start a listing job of their own, so the directory is read and the
+    * file-name filter prunes its file list before the scan.
     */
-  override def history(metricKey: String, q: MetricsQuery): Seq[(Long, Double)] = {
-    val pushed = Seq(Some(col("metric") === metricKey), q.before.map(col("timestamp") < _),
-      q.after.map(col("timestamp") > _)).flatten.reduce(_ && _)
-    val runs = readLog(spark).filter(pushed).select("timestamp", "tags", "value")
-      .as[(Long, String, Double)].collect()
-      .groupMapReduce(r => (r._1, r._2))(_._3)(maxValue)
-    newestPage(runs.toSeq.sortBy(_._1).collect {
-      case ((ts, tags), v) if q.matches(MetricRecord(ResultKey(ts, decodeTags(tags)), Map.empty)) =>
-        ts -> v
-    }, q)
-  }
-
-  /** Predicate-pushed bounded read: `metric = key` prunes row groups at the parquet
-    * scan, duplicate rows merge to the max value exactly like loadAll's record merge,
-    * and the newest-N cut runs as a distributed TopK (TakeOrdered) in [[history]]'s
-    * (timestamp, tags) order — the driver collects at most N rows however long the
-    * stream has been appending. Unbounded, it is [[history]].
-    */
-  override def pointsFor(metricKey: String, newestN: Option[Int]): Seq[(Long, Double)] =
-    newestN match {
-      case None => history(metricKey)
-      case Some(n) =>
-        readLog(spark).filter(col("metric") === metricKey)
-          .groupBy(col("timestamp"), col("tags")).agg(max(col("value")).as("value"))
-          .orderBy(col("timestamp").desc, col("tags").desc).limit(n)
-          .as[(Long, String, Double)].collect().toSeq
-          .sortBy(r => (r._1, r._2)).map(r => r._1 -> r._3)
+  private def logRows(): Seq[LogRow] = seen.synchronized {
+    val dir = new Path(path)
+    val listed = try dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(dir, (p: Path) => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+        .filter(_.isFile).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val unseen = listed.filterNot(s => seen.get(s.getPath.getName).exists(_.key == fileKey(s)))
+    if (unseen.nonEmpty) {
+      val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
+      val paths = if (unseen.size > threshold.toInt) Seq(path) else unseen.map(_.getPath.toString)
+      val rows = spark.read.schema(LogSchema).parquet(paths: _*)
+        .where(col("_metadata.file_name").isin(unseen.map(_.getPath.getName): _*))
+        .select(col("_metadata.file_name"), col("timestamp"), col("tags"), col("metric"), col("value"))
+        .as[(String, Long, String, String, Double)].collect().toSeq
+        .groupMap(_._1)(r => LogRow(r._2, r._3, r._4, r._5))
+      unseen.foreach(s => seen(s.getPath.getName) = LogFile(fileKey(s), rows.getOrElse(s.getPath.getName, Nil)))
     }
-
-  /** Exact (metric, timestamp) probe — both predicates reach the file scan; ties
-    * across tag sets resolve to the max value, matching loadAll's merge direction.
-    */
-  override def pointAt(metricKey: String, timestamp: Long): Option[Double] = {
-    val row = readLog(spark)
-      .filter(col("metric") === metricKey && col("timestamp") === timestamp)
-      .agg(max(col("value"))).head()
-    if (row.isNullAt(0)) None else Some(row.getDouble(0))
+    val names = listed.map(_.getPath.getName)
+    seen.subtractAll(seen.keySet.diff(names.toSet))
+    names.flatMap(seen(_).rows)
   }
 
+  /** One metric's points; duplicate rows of a (timestamp, tags) run merge to the max
+    * value exactly like loadAll. `pointsFor` and `pointAt` read through here.
+    */
+  override def history(metricKey: String, q: MetricsQuery): Seq[(Long, Double)] =
+    newestPage(logRows().filter(_.metric == metricKey)
+      .groupMapReduce(r => (r.timestamp, r.tags))(_.value)(maxValue).toSeq.sortBy(_._1)
+      .collect { case ((ts, tags), v)
+        if q.matches(MetricRecord(ResultKey(ts, decodeTags(tags)), Map.empty)) => ts -> v }, q)
+
+  /** One record per (timestamp, tags) run; a metric saved twice in it keeps its max. */
   def loadAll(): Seq[MetricRecord] =
-    readLog(spark)
-      .as[(Long, String, String, Double)]
-      .collect().toSeq
-      .groupBy(r => (r._1, r._2)).toSeq
-      .map { case ((ts, tags), rows) =>
-        // Sorted before toMap: groupBy preserves collect() order, which is partition-
-        // nondeterministic — a duplicated metric name resolves to its max value.
-        (tags, MetricRecord(ResultKey(ts, decodeTags(tags)),
-          rows.sortBy(r => (r._3, r._4)).map(r => r._3 -> r._4).toMap))
-      }.sortBy(r => (r._2.key.timestamp, r._1)).map(_._2)
+    logRows().groupBy(r => (r.timestamp, r.tags)).toSeq.sortBy(_._1).map { case ((ts, tags), rows) =>
+      MetricRecord(ResultKey(ts, decodeTags(tags)), rows.groupMapReduce(_.metric)(_.value)(maxValue))
+    }
 }
 object ParquetMetricsRepository {
   import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+
+  private final case class LogRow(timestamp: Long, tags: String, metric: String, value: Double)
+  /** A log file's rows under the (length, modification time) it was listed with. */
+  private final case class LogFile(key: (Long, Long), rows: Seq[LogRow])
+  private def fileKey(s: org.apache.hadoop.fs.FileStatus) = (s.getLen, s.getModificationTime)
 
   /** The metric log's four columns; [[ParquetSchema]] is their layout in a file. */
   private val LogSchema: StructType = StructType(Seq(StructField("timestamp", LongType),

@@ -367,11 +367,10 @@ object StreamingAnalysis {
       // foreachBatch is at-least-once: a batch replayed after a mid-commit failure must
       // not append its metric twice (duplicate history points corrupt every later
       // change/z-score comparison). The batch id IS the record timestamp, so replays
-      // are detected by key. History is read ONCE per batch and BOUNDED end to end —
-      // pointsFor pushes the exact-key filter and newest-N cut into the repository
-      // (the parquet backend runs it as a predicate-pushed TopK, so the driver
-      // collects N rows however long the stream has run); the newest-N window is what
-      // every strategy actually consumes.
+      // are detected by key. History is read ONCE per batch and comes back bounded:
+      // pointsFor returns the exact key's newest N points, the window every strategy
+      // actually consumes (the parquet backend answers from the log rows it already
+      // holds and reads only the log files it has not seen).
       val prior = repo.pointsFor(metricKey, historyLimit)
       val point = batchId -> metricOf(batch)
       // Replay/collision detection must be EXACT even past the bounded window: a

@@ -909,6 +909,35 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("z-score latest-point verdict equals detect's on random series") {
+    import graft.analyzers.{AnomalyDetectionRunner, ZScoreStrategy}
+    import graft.repository.{InMemoryMetricsRepository, ResultKey}
+    val rnd = new scala.util.Random(17)
+    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    val verdicts = (1 to 2000).map { c =>
+      // short series (below minHistory), constant ones (sd = 0), non-finite values and
+      // runs of points at one timestamp, the latest included
+      val base = rnd.nextGaussian() * 10
+      val timestamps = (1 to rnd.nextInt(16)).scanLeft(0L)((t, _) => t + rnd.nextInt(3)).tail
+      val series = timestamps.map { ts =>
+        ts -> (if (c % 5 == 0) base
+          else if (rnd.nextInt(8) == 0) nonFinite(rnd.nextInt(3))
+          else base + rnd.nextGaussian() * (if (rnd.nextInt(6) == 0) 50 else 1))
+      }
+      val z = ZScoreStrategy(threshold = Seq(1.0, 2.0, 3.0)(rnd.nextInt(3)), minHistory = rnd.nextInt(5))
+      def expected(h: Seq[(Long, Double)]) =
+        h.lastOption.exists { case (ts, _) => z.detect(h).exists(_.timestamp == ts) }
+      assert(z.flagsLatest(series) == expected(series), s"$z on $series")
+      // through the runner: points at one timestamp are runs under different tag sets
+      val repo = new InMemoryMetricsRepository
+      series.zipWithIndex.foreach { case ((ts, v), i) => repo.save(ResultKey(ts, Map("i" -> s"$i")), Map("m" -> v)) }
+      val verdict = new AnomalyDetectionRunner(repo, Map("m" -> z)).isLatestAnomalous("m")
+      assert(verdict == expected(repo.history("m")), s"$z on ${repo.history("m")}")
+      verdict
+    }
+    assert(verdicts.count(identity) > 50 && verdicts.count(!_) > 50)
+  }
+
   test("empty input: aggregate constraints skip, size succeeds at zero") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Option[Double])].toDF("id", "v")
