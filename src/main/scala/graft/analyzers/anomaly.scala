@@ -11,9 +11,9 @@ trait AnomalyDetectionStrategy {
   /** Given history (oldest first), return detected anomalies. */
   def detect(series: Seq[(Long, Double)]): Seq[Anomaly]
 
-  /** True iff [[detect]] flags a point at the timestamp of the series' last point. */
-  def flagsLatest(series: Seq[(Long, Double)]): Boolean =
-    series.lastOption.exists { case (ts, _) => detect(series).exists(_.timestamp == ts) }
+  /** The anomalies [[detect]] returns at `timestamp`: the one point a caller judges. */
+  def anomaliesAt(series: Seq[(Long, Double)], timestamp: Long): Seq[Anomaly] =
+    detect(series).filter(_.timestamp == timestamp)
 }
 
 /** Flags relative changes outside [maxDecrease, maxIncrease]
@@ -71,14 +71,12 @@ final case class ZScoreStrategy(threshold: Double = 3.0, minHistory: Int = 3)
     s.indices.flatMap(anomalyAt(s, _))
   }
 
-  /** Scores only the points at the latest timestamp — one pass over the history, not
+  /** Scores only the points at `timestamp` — one pass over the history, not
     * [[detect]]'s one per point.
     */
-  override def flagsLatest(series: Seq[(Long, Double)]): Boolean = {
+  override def anomaliesAt(series: Seq[(Long, Double)], timestamp: Long): Seq[Anomaly] = {
     val s = series.toIndexedSeq
-    s.lastOption.exists { case (ts, _) =>
-      s.indices.exists(i => s(i)._1 == ts && anomalyAt(s, i).nonEmpty)
-    }
+    s.indices.filter(s(_)._1 == timestamp).flatMap(anomalyAt(s, _))
   }
 
   /** Point `i` scored against the points before it. */
@@ -126,5 +124,8 @@ final class AnomalyDetectionRunner(
     * could race a concurrent append, checking a stale latest against a newer series).
     */
   def isLatestAnomalous(metricKey: String): Boolean =
-    strategyFor(metricKey).exists(_.flagsLatest(repository.history(metricKey)))
+    strategyFor(metricKey).exists { strategy =>
+      val h = repository.history(metricKey)
+      h.lastOption.exists { case (ts, _) => strategy.anomaliesAt(h, ts).nonEmpty }
+    }
 }

@@ -66,13 +66,8 @@ trait MetricsRepository {
   def history(metricKey: String, q: MetricsQuery = MetricsQuery(newestFirst = false)): Seq[(Long, Double)] = {
     val records = query(q.copy(forAnalyzers = Seq(metricKey), newestFirst = false,
       limit = None, offset = 0))
-    newestPage(records.flatMap(r => r.metrics.get(metricKey).map(r.key.timestamp -> _)), q)
-  }
-
-  /** `q`'s offset and limit counted from the newest of the oldest-first `points`. */
-  protected final def newestPage(points: Seq[(Long, Double)],
-      q: MetricsQuery): Seq[(Long, Double)] = {
-    val newestFirst = points.reverse.drop(q.offset)
+    val newestFirst = records.flatMap(r => r.metrics.get(metricKey).map(r.key.timestamp -> _))
+      .reverse.drop(q.offset)
     q.limit.map(newestFirst.take).getOrElse(newestFirst).reverse
   }
 
@@ -135,7 +130,9 @@ final class InMemoryMetricsRepository extends MetricsRepository {
   * log schema declared; files gone from the listing are forgotten. `save` registers
   * its own file, so a sole writer's reads run no job. Log files never change once
   * renamed into place, so the answers are those of a full scan. The trade-off: the
-  * instance holds every row of the log, what `loadAll` collects, while it lives.
+  * instance holds every row of the log, what `loadAll` collects, while it lives, and
+  * every read (`history`, `pointsFor` and `pointAt` are the trait's, over `loadAll`)
+  * walks all of those rows on the driver.
   */
 final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.SparkSession)
     extends MetricsRepository {
@@ -192,9 +189,9 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
   }
 
   /** Every row of the log as listed now: remembered rows for the files already seen,
-    * one Spark job for the rest. Past Spark's parallel-discovery threshold, explicit
-    * paths would start a listing job of their own, so the directory is read and the
-    * file-name filter prunes its file list before the scan.
+    * one Spark job for the rest. The job reads the directory, not the files: explicit
+    * paths past Spark's parallel-discovery threshold would start a listing job of their
+    * own, and the file-name filter prunes Spark's file list before the scan.
     */
   private def logRows(): Seq[LogRow] = seen.synchronized {
     val dir = new Path(path)
@@ -204,9 +201,7 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
       catch { case _: java.io.FileNotFoundException => Nil }
     val unseen = listed.filterNot(s => seen.get(s.getPath.getName).exists(_.key == fileKey(s)))
     if (unseen.nonEmpty) {
-      val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold", "32")
-      val paths = if (unseen.size > threshold.toInt) Seq(path) else unseen.map(_.getPath.toString)
-      val rows = spark.read.schema(LogSchema).parquet(paths: _*)
+      val rows = spark.read.schema(LogSchema).parquet(path)
         .where(col("_metadata.file_name").isin(unseen.map(_.getPath.getName): _*))
         .select(col("_metadata.file_name"), col("timestamp"), col("tags"), col("metric"), col("value"))
         .as[(String, Long, String, String, Double)].collect().toSeq
@@ -217,15 +212,6 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
     seen.subtractAll(seen.keySet.diff(names.toSet))
     names.flatMap(seen(_).rows)
   }
-
-  /** One metric's points; duplicate rows of a (timestamp, tags) run merge to the max
-    * value exactly like loadAll. `pointsFor` and `pointAt` read through here.
-    */
-  override def history(metricKey: String, q: MetricsQuery): Seq[(Long, Double)] =
-    newestPage(logRows().filter(_.metric == metricKey)
-      .groupMapReduce(r => (r.timestamp, r.tags))(_.value)(maxValue).toSeq.sortBy(_._1)
-      .collect { case ((ts, tags), v)
-        if q.matches(MetricRecord(ResultKey(ts, decodeTags(tags)), Map.empty)) => ts -> v }, q)
 
   /** One record per (timestamp, tags) run; a metric saved twice in it keeps its max. */
   def loadAll(): Seq[MetricRecord] =

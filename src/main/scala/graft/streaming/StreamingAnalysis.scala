@@ -385,7 +385,7 @@ object StreamingAnalysis {
       def alertFor(series: Seq[(Long, Double)]): Unit = {
         // Only THIS batch's point may alert — detect() returns every historical anomaly
         // each time, and re-firing them every micro-batch is an alert storm.
-        val anomalies = strategy.detect(series.sortBy(_._1)).filter(_.timestamp == batchId)
+        val anomalies = strategy.anomaliesAt(series.sortBy(_._1), batchId)
         if (anomalies.nonEmpty) onAnomaly(batchId, anomalies)
       }
       existing match {

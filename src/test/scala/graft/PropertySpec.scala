@@ -909,7 +909,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("z-score latest-point verdict equals detect's on random series") {
+  test("z-score anomaliesAt equals detect's anomalies at that timestamp on random series") {
     import graft.analyzers.{AnomalyDetectionRunner, ZScoreStrategy}
     import graft.repository.{InMemoryMetricsRepository, ResultKey}
     val rnd = new scala.util.Random(17)
@@ -925,9 +925,13 @@ class PropertySpec extends SparkSpec {
           else base + rnd.nextGaussian() * (if (rnd.nextInt(6) == 0) 50 else 1))
       }
       val z = ZScoreStrategy(threshold = Seq(1.0, 2.0, 3.0)(rnd.nextInt(3)), minHistory = rnd.nextInt(5))
+      // the latest timestamp, a random one and one the series does not carry
+      val picked = series.lift(rnd.nextInt(series.size max 1)).map(_._1)
+      (series.lastOption.map(_._1).toSeq ++ picked :+ -1L).foreach { ts =>
+        assert(z.anomaliesAt(series, ts) == z.detect(series).filter(_.timestamp == ts), s"$z at $ts on $series")
+      }
       def expected(h: Seq[(Long, Double)]) =
         h.lastOption.exists { case (ts, _) => z.detect(h).exists(_.timestamp == ts) }
-      assert(z.flagsLatest(series) == expected(series), s"$z on $series")
       // through the runner: points at one timestamp are runs under different tag sets
       val repo = new InMemoryMetricsRepository
       series.zipWithIndex.foreach { case ((ts, v), i) => repo.save(ResultKey(ts, Map("i" -> s"$i")), Map("m" -> v)) }
