@@ -1,10 +1,10 @@
 package graft.analyzers
 
-import graft.core.MetricValue
+import graft.core.{FsUtil, MetricValue}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.{ChecksumException, FileContext, LocalFileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileContext, Options, Path}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.Files
 import java.util.zip.CRC32
 
 /** Persistence of analyzer states keyed by (analyzerKey, partitionKey)
@@ -45,29 +45,16 @@ final class FileSystemStateStore(rootDir: String, spark: SparkSession) extends S
     val bytes = Codec.encode(fields)
     // Write-temp-then-replace: a crash (or a reader racing the writer) must never see
     // a TRUNCATED state file, and must never see the file MISSING either — load()
-    // returning None mid-replace is read by the incremental runner's replay check as
-    // "fresh partition" and double-counts the cumulative.
-    path.getFileSystem(conf) match {
-      case local: LocalFileSystem =>
-        // Local disk: ONE file written past the checksum layer, then rename(2) over the
-        // target, which replaces it atomically. The in-file CRC line stands in for the
-        // .crc sidecar; a sidecar left by an older writer is deleted first, or the
-        // checksummed reader would verify the new bytes against it.
-        val target = local.pathToFile(path).toPath
-        val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
-        Files.createDirectories(target.getParent)
-        Files.write(tmp, bytes)
-        Files.deleteIfExists(local.pathToFile(local.getChecksumFile(path)).toPath)
-        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      case fs =>
-        // FileContext.rename(OVERWRITE) is an atomic replace only where the file system
-        // implements it natively (HDFS). Every DelegateToFileSystem store (s3a, gs,
-        // abfs) gets AbstractFileSystem's delete-then-rename: a reader in that window
-        // sees no file. Object stores never expose a partial object either way.
-        val tmp = new Path(path.getParent, s".${path.getName}.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(bytes) finally out.close()
-        FileContext.getFileContext(path.toUri, conf).rename(tmp, path, Options.Rename.OVERWRITE)
+    // returning None mid-replace drops that partition from a cumulative rebuild.
+    if (!FsUtil.replaceLocal(path, conf)(Files.write(_, bytes))) {
+      // FileContext.rename(OVERWRITE) is an atomic replace only where the file system
+      // implements it natively (HDFS). Every DelegateToFileSystem store (s3a, gs,
+      // abfs) gets AbstractFileSystem's delete-then-rename: a reader in that window
+      // sees no file. Object stores never expose a partial object either way.
+      val tmp = new Path(path.getParent, s".${path.getName}.tmp")
+      val out = path.getFileSystem(conf).create(tmp, true)
+      try out.write(bytes) finally out.close()
+      FileContext.getFileContext(path.toUri, conf).rename(tmp, path, Options.Rename.OVERWRITE)
     }
   }
   def load(a: String, p: String): Option[Map[String, String]] = {
@@ -146,8 +133,8 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
   // mid-migration leaves the remaining legacy partitions to be picked up by the next
   // run instead of stranding them behind a "new key is non-empty" guard. A partition
   // present under BOTH keys keeps the new key's record (it is newer by construction).
-  // Legacy CUMULATIVE records are deleted, not moved — the stamped-count rebuild
-  // machinery regenerates the cumulative from the migrated partitions — and only in a
+  // Legacy CUMULATIVE records are deleted, not moved — a record that does not cover
+  // the listed partitions is rebuilt from them (see `cumulative`) — and only in a
   // run that actually migrated data partitions: a store holding ONLY a legacy
   // cumulative (data partitions pruned externally) keeps it, because that record is
   // the sole survivor of its history and nothing under the new key can regenerate it.
@@ -198,58 +185,64 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
     store.listPartitions(analyzerKey).filterNot(_ == CumulativeKey)
   }
 
-  // The cumulative record is stamped with how many partition states produced it, so
-  // the fast fold path can detect a stale cumulative (deleted partitions, legacy or
-  // crash-window records) with one directory listing.
-  private val NPartsField = "__nparts"
+  // The cumulative record names the data partitions it merges: SHA-256 over their
+  // sorted keys, each prefixed with its UTF-8 length.
+  private val CoversField = "__covers"
+  private def covers(keys: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    keys.sorted.foreach { k =>
+      val b = k.getBytes(StandardCharsets.UTF_8)
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array())
+      md.update(b)
+    }
+    java.util.HexFormat.of().formatHex(md.digest())
+  }
 
-  /** Rebuild an analyzer's cumulative state as the merge of ALL stored data-partition
-    * states and persist it. Deriving the cumulative from the per-partition states —
-    * instead of folding each new state into it — makes every write path idempotent:
-    * replaying a partition (at-least-once `foreachBatch`) or re-analyzing it with
-    * corrected data overwrites that partition's state and can never double-count.
+  /** The stored states of `keys` merged, and the keys that loaded. */
+  private def mergeStored(a: Analyzer[_], keys: Seq[String]): (Option[Any], Seq[String]) = {
+    val loaded = keys.flatMap(p => store.load(a.key, p).map(f => p -> a.stateFromFields(f)))
+    (loaded.map(_._2).reduceOption(a.mergeAnyStates), loaded.map(_._1))
+  }
+
+  /** An analyzer's cumulative state after `fresh` (partition key → state, already
+    * saved; empty for a read). The record FOLDS the fresh states only when it covers
+    * exactly the other listed partitions (no record covers none): one listing and one
+    * point read, where a rebuild is O(all partitions). Anything else — a replayed key,
+    * a partition deleted or added outside the runner, a crash between the saves, a
+    * record older than the digest — REBUILDS from every listed state and names the
+    * keys that loaded. Deriving the cumulative from the per-partition states makes
+    * every write path idempotent: a replay overwrites its partition's state and can
+    * never double-count. Writes only when something changed.
     */
-  private def rebuildCumulative(a: Analyzer[_]): Option[Any] = {
-    val states = dataPartitions(a.key)
-      .flatMap(p => store.load(a.key, p)).map(a.stateFromFields)
-    val merged = states.reduceOption((x, y) => a.mergeAnyStates(x, y))
-    merged.foreach(m => store.save(a.key, CumulativeKey,
-      a.fieldsOfAnyState(m) + (NPartsField -> states.size.toString)))
+  private def cumulative(a: Analyzer[_], fresh: Seq[(String, Any)]): Option[Any] = {
+    val listed = dataPartitions(a.key)
+    val record = store.load(a.key, CumulativeKey)
+    val freshKeys = fresh.map(_._1)
+    val others = listed.filterNot(freshKeys.toSet)
+    val folds = record.fold(Option(covers(Nil)))(_.get(CoversField)).contains(covers(others))
+    val (merged, merges) =
+      if (!folds) mergeStored(a, listed)
+      else ((record.map(a.stateFromFields) ++ fresh.map(_._2)).reduceOption(a.mergeAnyStates),
+        others ++ freshKeys)
+    if (!folds || fresh.nonEmpty) merged.foreach(m =>
+      store.save(a.key, CumulativeKey, a.fieldsOfAnyState(m) + (CoversField -> covers(merges))))
     merged
   }
 
-  /** Advance the cumulative state after `fresh` partition states were saved. FRESH keys
-    * (the common streaming path) FOLD into the stored cumulative — O(1) store reads,
-    * where the full rebuild is O(all partitions) per call and made long-lived
-    * incremental sinks quadratic in total I/O. Any REPLAYED key (it already existed —
-    * its old state is being overwritten, so the stored cumulative includes a
-    * contribution that must not be double-counted) falls back to the full idempotent
-    * rebuild. A crash between a partition save and this fold is also safe: the retry
-    * sees the key as replayed and rebuilds.
+  /** Saves every partition's rendered states (one per analyzer, in order), then
+    * advances each analyzer's cumulative state and returns the metrics. Callers
+    * render every field map first: a failing analyzer or `toFields` must abort with
+    * the store untouched, not after earlier saves.
     */
-  private def updateCumulative(a: Analyzer[_], fresh: Seq[Any], anyReplayed: Boolean): Option[Any] =
-    if (anyReplayed) rebuildCumulative(a)
-    else {
-      val curFields = store.load(a.key, CumulativeKey)
-      // Consistency check before trusting the fold: after the fresh saves, the
-      // cumulative's stamped producer count + |fresh| must equal the actual partition
-      // listing. A mismatch means partitions were DELETED (store.delete is public —
-      // the old cumulative would propagate their contribution forever), or the
-      // record predates the stamp, or a crash hit the save window — rebuild instead.
-      // One directory listing; the fold stays O(1) point reads on the common path.
-      val actual = dataPartitions(a.key).size.toLong
-      val consistent =
-        curFields.flatMap(_.get(NPartsField)).map(_.toLong).contains(actual - fresh.size) ||
-          (curFields.isEmpty && actual == fresh.size)
-      if (!consistent) rebuildCumulative(a)
-      else {
-        val cur = curFields.map(a.stateFromFields)
-        val merged = (cur.toSeq ++ fresh).reduceOption((x, y) => a.mergeAnyStates(x, y))
-        merged.foreach(m => store.save(a.key, CumulativeKey,
-          a.fieldsOfAnyState(m) + (NPartsField -> actual.toString)))
-        merged
-      }
+  private def commit(parts: Seq[(String, Seq[(Any, Map[String, String])])]): Map[String, MetricValue] = {
+    parts.foreach { case (pk, ss) =>
+      analyzers.zip(ss).foreach { case (a, (_, f)) => store.save(a.key, pk, f) }
     }
+    analyzers.zipWithIndex.flatMap { case (a, i) =>
+      cumulative(a, parts.map { case (pk, ss) => pk -> ss(i)._1 })
+        .map(s => a.key -> a.metricFromAnyState(s))
+    }.toMap
+  }
 
   /** Whether any analyzer already has stored state under `partitionKey` — lets sinks
     * distinguish a first ingest from an overwrite (replay or checkpoint-reset
@@ -261,24 +254,17 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
   /** Analyze one new partition; returns metrics over (history ∪ partition). All
     * analyzers' states come from ONE scan of the partition (AnalysisRunner batching) —
     * the per-analyzer-scan shape the reference fell back to is a linear job-count tax.
-    * Idempotent under replay of the same `partitionKey` (see [[rebuildCumulative]]).
+    * Idempotent under replay of the same `partitionKey` (see [[cumulative]]).
     */
   def analyzePartition(df: DataFrame, partitionKey: String): Map[String, MetricValue] = {
     require(partitionKey != CumulativeKey && partitionKey != NullKey,
       s"partition key '$partitionKey' collides with a reserved state-store key")
     ensureMigrated()
     val ctx = new AnalysisRunner(analyzers, continueOnError = false).run(df)
-    // Materialize EVERY analyzer's state AND its rendered fields before the first save:
-    // a failed analyzer (or a toFields that throws) must abort the whole call with the
-    // store untouched, not after earlier analyzers already committed (a retry would
-    // then double-count them).
-    val newStates = analyzers.map(a => (a, ctx.states(a.key)))
-    val rendered = newStates.map { case (a, s) => (a, s, a.fieldsOfAnyState(s)) }
-    val replayed = analyzers.map(a => a.key -> store.load(a.key, partitionKey).isDefined).toMap
-    rendered.foreach { case (a, _, f) => store.save(a.key, partitionKey, f) }
-    rendered.map { case (a, s, _) =>
-      a.key -> a.metricFromAnyState(updateCumulative(a, Seq(s), replayed(a.key)).getOrElse(s))
-    }.toMap
+    commit(Seq(partitionKey -> analyzers.map { a =>
+      val s = ctx.states(a.key)
+      (s, a.fieldsOfAnyState(s))
+    }))
   }
 
   /** Analyze MANY new partitions in ONE scan: `groupBy(partitionExpr)` computes every
@@ -322,38 +308,18 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
         (row.getString(0) != CumulativeKey && row.getString(0) != NullKey),
         s"partition key value '${row.getString(0)}' collides with a reserved state-store key")
     }
-    // Construct EVERY partition's every state AND its rendered field map before the
-    // first save (stateFromValues and toFields can both throw, e.g. on an unexpected
-    // aggregate value) — failing mid-save would leave the store partially updated and
-    // a retry would have stale cumulative inputs.
-    val partStates = rows.sortBy(r => if (r.isNullAt(0)) NullKey else r.getString(0)).map { row =>
-      val pk = if (row.isNullAt(0)) NullKey else row.getString(0)
+    // stateFromValues can throw too (e.g. on an unexpected aggregate value), so every
+    // partition's states are built before commit saves the first one.
+    commit(rows.sortBy(r => if (r.isNullAt(0)) NullKey else r.getString(0)).toSeq.map { row =>
       val values = row.toSeq.drop(1)
       var offset = 0
-      pk -> analyzers.map { a =>
+      (if (row.isNullAt(0)) NullKey else row.getString(0)) -> analyzers.map { a =>
         val vs = values.slice(offset, offset + a.stateAggregates.size)
         offset += a.stateAggregates.size
         val s = a.stateFromValues(vs)
-        (a, s, a.fieldsOfAnyState(s))
+        (s, a.fieldsOfAnyState(s))
       }
-    }
-    // Replay detection BEFORE the saves overwrite the evidence. ONE listing per
-    // analyzer, not P×A point-reads: the exists() only short-circuits when a replay
-    // IS found, so the common all-fresh path would otherwise load every partition
-    // state file (100k driver-side FS reads at 10k partitions × 10 analyzers).
-    val replayed = analyzers.map { a =>
-      val existing = store.listPartitions(a.key).toSet
-      a.key -> partStates.exists { case (pk, _) => existing(pk) }
-    }.toMap
-    partStates.foreach { case (pk, ss) =>
-      ss.foreach { case (a, _, f) => store.save(a.key, pk, f) }
-    }
-    // Fresh keys fold into the cumulative; any replayed key triggers the full
-    // idempotent rebuild (see updateCumulative).
-    analyzers.zipWithIndex.foreach { case (a, i) =>
-      updateCumulative(a, partStates.toSeq.map(_._2(i)._2), replayed(a.key))
-    }
-    currentMetrics()
+    })
   }
 
   /** Metrics over a chosen subset of stored partitions (fan-out merge,
@@ -361,27 +327,12 @@ final class IncrementalAnalysisRunner(store: StateStore, analyzers: Seq[Analyzer
     */
   def analyzePartitions(partitionKeys: Seq[String]): Map[String, MetricValue] = {
     ensureMigrated()
-    analyzers.flatMap { a =>
-      val states = partitionKeys.flatMap(p => store.load(a.key, p)).map(a.stateFromFields)
-      states.reduceOption((x, y) => a.mergeAnyStates(x, y))
-        .map(s => a.key -> a.metricFromAnyState(s))
-    }.toMap
+    analyzers.flatMap(a =>
+      mergeStored(a, partitionKeys)._1.map(s => a.key -> a.metricFromAnyState(s))).toMap
   }
 
-  /** Current cumulative metrics without touching any data. */
-  def currentMetrics(): Map[String, MetricValue] = {
-    ensureMigrated()
-    analyzers.flatMap { a =>
-      // Trust the stored cumulative only when its producer-count stamp matches the
-      // actual partition listing; otherwise (migration just added partitions, records
-      // were deleted, pre-stamp record) rebuild from the partition states.
-      val cur = store.load(a.key, CumulativeKey)
-      val actual = dataPartitions(a.key).size.toLong
-      val state =
-        if (actual > 0 && cur.flatMap(_.get(NPartsField)).map(_.toLong).contains(actual))
-          cur.map(a.stateFromFields)
-        else rebuildCumulative(a)
-      state.map(s => a.key -> a.metricFromAnyState(s))
-    }.toMap
-  }
+  /** Current cumulative metrics without touching any data; writes only to rebuild a
+    * cumulative record that does not cover the listed partitions.
+    */
+  def currentMetrics(): Map[String, MetricValue] = commit(Nil)
 }

@@ -134,10 +134,30 @@ object Num {
   }
 }
 
-/** Recursive local-file delete, shared by the harness cleanup paths (source-query temp
-  * dirs, stale verify output).
+/** Local-file helpers: a recursive delete, shared by the harness cleanup paths
+  * (source-query temp dirs, stale verify output), and the atomic replace both stores
+  * write through.
   */
 private[graft] object FsUtil {
+  /** On the local file system, `write`s a hidden sibling of `path`, then rename(2)s it
+    * over `path`, which replaces it atomically for a concurrent reader. The write goes
+    * past Hadoop's checksum layer: no `.crc` sidecar and no `chmod` process. A sidecar
+    * left by an older writer is deleted first, or the checksummed reader would verify
+    * the new bytes against it. Returns false, writing nothing, on any other file system.
+    */
+  def replaceLocal(path: org.apache.hadoop.fs.Path, conf: org.apache.hadoop.conf.Configuration)(
+      write: java.nio.file.Path => Unit): Boolean = path.getFileSystem(conf) match {
+    case local: org.apache.hadoop.fs.LocalFileSystem =>
+      val target = local.pathToFile(path).toPath
+      val tmp = target.resolveSibling(s".${target.getFileName}.tmp")
+      java.nio.file.Files.createDirectories(target.getParent)
+      write(tmp)
+      java.nio.file.Files.deleteIfExists(local.pathToFile(local.getChecksumFile(path)).toPath)
+      java.nio.file.Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      true
+    case _ => false
+  }
+
   def deleteRecursively(f: java.io.File): Unit = {
     // Never recurse THROUGH a symlink: listFiles() resolves links, so recursing would
     // delete the link target's contents (potentially outside the intended tree).

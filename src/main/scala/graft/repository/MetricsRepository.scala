@@ -138,6 +138,7 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
     extends MetricsRepository {
   import ParquetMetricsRepository._
   import org.apache.hadoop.fs.Path
+  import org.apache.parquet.io.{LocalOutputFile, OutputFile}
   import org.apache.spark.sql.functions.col
   import spark.implicits._
 
@@ -147,30 +148,34 @@ final class ParquetMetricsRepository(path: String, spark: org.apache.spark.sql.S
   private val seen = scala.collection.mutable.HashMap.empty[String, LogFile]
 
   /** Written under a hidden temporary name, which Spark's file listing skips, then
-    * renamed into place: a concurrent read sees the whole file or none of it.
+    * renamed into place: a concurrent read sees the whole file or none of it. A local
+    * log is written past Hadoop's checksum layer (see `FsUtil.replaceLocal`).
     */
   def save(key: ResultKey, metrics: Map[String, Double]): Unit = if (metrics.nonEmpty) {
-    val dir = new Path(path)
-    val name = s"part-${java.util.UUID.randomUUID()}.parquet"
     val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = new Path(dir, s".$name.tmp")
-    val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(out)
-      .withConf(conf).withType(ParquetSchema)
-      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED)
-      .build()
+    val target = new Path(path, s"part-${java.util.UUID.randomUUID()}.parquet")
     val tags = encodeTags(key.tags)
     val rows = metrics.toSeq.map { case (m, v) => LogRow(key.timestamp, tags, m, v) }
-    try {
-      val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(ParquetSchema)
-      rows.foreach(r => w.write(groups.newGroup().append("timestamp", r.timestamp)
-        .append("tags", r.tags).append("metric", r.metric).append("value", r.value)))
-    } finally w.close()
-    val fs = dir.getFileSystem(conf)
-    val target = new Path(dir, name)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"could not rename $tmp into the metrics log")
-    seen.synchronized(seen(name) = LogFile(fileKey(fs.getFileStatus(target)), rows))
+    def write(out: OutputFile): Unit = {
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(out)
+        .withConf(conf).withType(ParquetSchema)
+        .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.UNCOMPRESSED)
+        .build()
+      try {
+        val groups = new org.apache.parquet.example.data.simple.SimpleGroupFactory(ParquetSchema)
+        rows.foreach(r => w.write(groups.newGroup().append("timestamp", r.timestamp)
+          .append("tags", r.tags).append("metric", r.metric).append("value", r.value)))
+      } finally w.close()
+    }
+    val fs = target.getFileSystem(conf)
+    if (!graft.core.FsUtil.replaceLocal(target, conf)(p => write(new LocalOutputFile(p)))) {
+      val tmp = new Path(target.getParent, s".${target.getName}.tmp")
+      write(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+      if (!fs.rename(tmp, target))
+        throw new java.io.IOException(s"could not rename $tmp into the metrics log")
+    }
+    // Keyed by the status the directory listing reads, so no later read re-reads it.
+    seen.synchronized(seen(target.getName) = LogFile(fileKey(fs.getFileStatus(target)), rows))
   }
 
   /** The metric log as a DataFrame, read by Spark from the files — no driver

@@ -486,10 +486,75 @@ class AnalyzerSpec extends SparkSpec {
     runner.analyzePartition(part(10.0), "p2")     // sum 13
     // expunge p1; the stored cumulative still contains its contribution
     store.delete("sum.v", "p1")
-    // next FRESH partition must detect the inconsistency (stamp != listing) and
+    // next FRESH partition must detect the inconsistency (the record covers p1) and
     // rebuild instead of folding the stale cumulative forward
     val m = runner.analyzePartition(part(100.0), "p3")
     assert(m("sum.v") == MetricValue.DoubleMetric(110.0), m.toString) // p2 + p3 only
+  }
+
+  test("the cumulative record names its partitions: outside deletes and adds rebuild, a count-stamped record rebuilds once") {
+    import spark.implicits._
+    def part(vs: Double*) = vs.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
+    val store = new InMemoryStateStore
+    val runner = new IncrementalAnalysisRunner(store, Seq(SumAnalyzer("v")))
+    runner.analyzePartition(part(1.0), "p1")
+    runner.analyzePartition(part(10.0), "p2")
+    // one partition deleted and another added outside the runner: the partition COUNT
+    // is unchanged, so only the named partitions tell the record is stale
+    store.delete("sum.v", "p1")
+    store.save("sum.v", "p9", Map("sum" -> "1000.0", "count" -> "1"))
+    val m = runner.analyzePartition(part(100.0), "p3")
+    assert(m("sum.v") == MetricValue.DoubleMetric(1110.0), m.toString) // p2 + p9 + p3
+
+    // a record from before the digest carries only the partition count: it is
+    // rebuilt from the partition states (its own value is never trusted), then folds
+    val counted = store.load("sum.v", "__cumulative__").get.filter(_._1 == "count") ++
+      Map("sum" -> "-1.0", "__nparts" -> "3")
+    store.save("sum.v", "__cumulative__", counted)
+    val counting = new CountingStore(store)
+    val r2 = new IncrementalAnalysisRunner(counting, Seq(SumAnalyzer("v")))
+    assert(r2.analyzePartition(part(0.5), "p4")("sum.v") == MetricValue.DoubleMetric(1110.5))
+    assert(counting.loads == 1 + 4, "rebuild: the record, then every listed state")
+    assert(!store.load("sum.v", "__cumulative__").get.contains("__nparts"))
+    counting.reset()
+    assert(r2.analyzePartition(part(0.25), "p5")("sum.v") == MetricValue.DoubleMetric(1110.75))
+    assert(counting.loads == 1, "fold: the record only")
+  }
+
+  test("store traffic: a fresh ingest, a replay and a batched ingest") {
+    val store = new CountingStore(new InMemoryStateStore)
+    val runner = new IncrementalAnalysisRunner(store, Seq(SizeAnalyzer(), MeanAnalyzer("x")))
+    val a = 2
+    runner.analyzePartition(part1, "p1")
+    assert((store.loads, store.saves, store.lists) == ((a, 2 * a, a)), "first ingest")
+    store.reset()
+    runner.analyzePartition(part2, "p2")
+    assert((store.loads, store.saves, store.lists) == ((a, 2 * a, a)), "fresh ingest folds")
+    store.reset()
+    // a replay rebuilds: the record, then both listed states, per analyzer
+    runner.analyzePartition(part2, "p2")
+    assert((store.loads, store.saves, store.lists) == ((a + 2 * a, 2 * a, a)), "replay")
+    assert(d(runner.currentMetrics()("size.*")) == 1000.0)
+
+    val batched = new CountingStore(new InMemoryStateStore)
+    val batRunner = new IncrementalAnalysisRunner(batched, Seq(SizeAnalyzer(), MeanAnalyzer("x")))
+    val p = 3
+    assert(d(batRunner.analyzePartitionsBatched(full, col("id") % p)("size.*")) == 1000.0)
+    assert((batched.loads, batched.saves, batched.lists) == ((a, p * a + a, a)), "batched")
+    batched.reset()
+    // a read of a consistent record writes nothing
+    assert(d(batRunner.currentMetrics()("size.*")) == 1000.0)
+    assert((batched.loads, batched.saves, batched.lists) == ((a, 0, a)), "currentMetrics")
+  }
+
+  /** Counts the calls a runner makes to the store it wraps. */
+  private final class CountingStore(inner: StateStore) extends StateStore {
+    var loads, saves, lists = 0
+    def reset(): Unit = { loads = 0; saves = 0; lists = 0 }
+    def save(a: String, p: String, f: Map[String, String]): Unit = { saves += 1; inner.save(a, p, f) }
+    def load(a: String, p: String): Option[Map[String, String]] = { loads += 1; inner.load(a, p) }
+    def listPartitions(a: String): Seq[String] = { lists += 1; inner.listPartitions(a) }
+    def delete(a: String, p: String): Unit = inner.delete(a, p)
   }
 
   test("moments stddev never goes NaN on large-magnitude low-variance data") {
